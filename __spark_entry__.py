@@ -2,29 +2,11 @@
 
 ``entry(spark)`` runs the flagship query (the reference's "Data flow
 $__interval-average [kB/s]" panel shape, RTCM monitor.json:645) at
-sf0.001. ``queries()`` exposes every implemented operator from
-SURVEY.md §2 (plus the training-data pipeline extensions);
+sf0.001. ``queries()`` exposes every registered query under its
+registry name: the implemented operators from SURVEY.md §2 plus the
+training-data pipeline extensions;
 ``oracle_sql()`` gives the DuckDB-equivalent SQL for each (queries
 without an entry are checked rows-only by the driver).
-
-Naming note (round 12): the driver records correctness rows for the
-first 50 names alphabetically. This round's window closes the
-rotation debt: the 4 never-driver-graded round-11 registrations
-(lo04_compaction_plan, mx04_unimax_waterfill, qa08_calibration_bins,
-sp15_neyman_allocation), q13_mod_latency (stalest SURVEY §2.5 green,
-r7), and the entire r4/r6 stale-green tail including
-sn02_reconnect_pairs (SURVEY K5) — after this window grades green,
-every registered query has a driver-green row. The 16 pb probes and
-the dq08 DECIMAL canary remain RETIRED to ``x_`` aliases (the
-HUGEINT/DECIMAL class is closed; plans.registry.DRIVER_ROTATED_OUT
-documents the policy, tests/test_driver_contract.py pins the frozen
-window, CHANGED_SINCE_GREEN_R12 ledgers the three rotated-out ss
-plans touched by this round's codegen refactor). All queries stay
-registered under canonical names and locally DuckDB-parity-checked —
-every registered query carries a full value oracle (see
-docs/OPERATORS.md for the live count); cross-round driver coverage is
-derived by tools/coverage_report.py, and tools/driver_sim.py replays
-the exact window gate locally (round-12 run: 50/50 green at sf0.01).
 """
 
 from __future__ import annotations
@@ -60,14 +42,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    from ntripmonitor_spark.plans.registry import exposed_items
+    """One entry per registered query, under its registry name."""
+    from ntripmonitor_spark.plans import REGISTRY
 
-    return {name: _pin_utc(q.fn) for name, q in exposed_items()}
+    return {name: _pin_utc(q.fn) for name, q in sorted(REGISTRY.items())}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle SQL per query (omitted → rows-only check)."""
-    from ntripmonitor_spark.plans.registry import exposed_items
+    from ntripmonitor_spark.plans import REGISTRY
 
-    return {name: q.oracle for name, q in exposed_items() if q.oracle}
+    return {name: q.oracle for name, q in sorted(REGISTRY.items()) if q.oracle}

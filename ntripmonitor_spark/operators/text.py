@@ -446,30 +446,36 @@ def _vocab_mapper(vocab: list[str], unk: str = "<unk>"):
     return to_vocab
 
 
-def _vocab_id_mapper(vocab: list[str]):
+def _vocab_id_mapper(vocab: list[str], unk: str = "<unk>"):
     """Closed-vocabulary token→INT-id mapper: token → its vocab index
-    if in ``vocab`` else ``len(vocab)`` (the <unk> id), taking the
+    if in ``vocab`` else ``len(vocab)`` (the unk id), taking the
     operand as a SQL fragment.
 
     The int-id twin of :func:`_vocab_mapper` for consumers that never
     emit the mapped TOKEN itself, only statistics keyed on it
-    (bigram_nll's model counts): the mapping is a bijection on
-    vocab ∪ {unk}, so every downstream count/group/join is identical,
-    while the grouped/cached/joined key narrows from a string to a
-    4-byte int (guide §2.3 — at corpus scale the persisted mapped
-    relation and the model join shuffle a fraction of the bytes).
+    (bigram_nll's model counts). A literal ``unk`` token inside
+    ``vocab`` also maps to the unk id, because the string mapper emits
+    the same symbol for it and for every out-of-vocab token. The ids
+    are therefore a bijection on the string mapper's output symbols
+    (vocab with ``unk`` removed, plus ``unk``), so every downstream
+    count/group/join is identical, while the grouped/cached/joined key
+    narrows from a string to a 4-byte int (guide §2.3 — at corpus scale
+    the persisted mapped relation and the model join shuffle a fraction
+    of the bytes).
     Rendered as ONE literal-map lookup (constant-folded by Catalyst;
     one SQL parse, no per-element py4j — the fastlit discipline)."""
     from ntripmonitor_spark.functions.fastlit import _render_string
 
-    entries = ",".join(f"{_render_string(w)},{i}" for i, w in enumerate(vocab))
-    unk = len(vocab)
+    entries = ",".join(
+        f"{_render_string(w)},{i}" for i, w in enumerate(vocab) if w != unk
+    )
+    unk_id = len(vocab)
 
     def to_vocab_id(operand_sql: str) -> Column:
-        if not vocab:
-            return F.expr(f"CAST({unk} AS INT)")
+        if not entries:
+            return F.expr(f"CAST({unk_id} AS INT)")
         return F.expr(
-            f"coalesce(element_at(map({entries}), {operand_sql}), {unk})"
+            f"coalesce(element_at(map({entries}), {operand_sql}), {unk_id})"
         )
 
     return to_vocab_id
@@ -520,10 +526,10 @@ def bigram_nll(docs: DataFrame, vocab_size: int = 64, k: float = 0.5,
     vocab = [r["tok"] for r in vocab_rows]
     v_plus = float(len(vocab) + 1)  # + <unk>
     # INT vocab ids, not the token strings (round-13, guide §2.3): the
-    # mapping is a bijection on vocab ∪ {unk}, so the model counts —
-    # and therefore every logp and the emitted avg_nll — are identical,
-    # while the persisted corpus relation and the model join key narrow
-    # from 2 strings to 2 ints. A/B at sf0.1 (interleaved best-of-4):
+    # ids are a bijection on the string mapper's symbols, so the model
+    # counts — and therefore every logp and the emitted avg_nll — are
+    # identical, while the persisted corpus relation and the model join
+    # key narrow from 2 strings to 2 ints. A/B at sf0.1 (interleaved best-of-4):
     # −25% end-to-end on top of the struct-pair change; value-identity
     # pinned by test_bigram_nll_id_form_matches_string_form.
     to_vocab = _vocab_id_mapper(vocab)

@@ -2740,9 +2740,7 @@ def dd09_block_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# er01 — entity resolution (blocking + edit distance). Registered
-# PRE-ROTATED (see registry.DRIVER_ROTATED_OUT): added after round 4's
-# 50-slot verification window filled; enters the window in round 5.
+# er01 — entity resolution (blocking + edit distance).
 # ---------------------------------------------------------------------------
 
 
@@ -2776,7 +2774,7 @@ def er01_name_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# tx13 — per-document TF-IDF keywords (pre-rotated, window round 5).
+# tx13 — per-document TF-IDF keywords.
 # ---------------------------------------------------------------------------
 
 
@@ -2811,7 +2809,7 @@ def tx13_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ks01 — per-source Kolmogorov-Smirnov drift (pre-rotated, window round 5).
+# ks01 — per-source Kolmogorov-Smirnov drift.
 # ---------------------------------------------------------------------------
 
 
@@ -2857,7 +2855,7 @@ def ks01_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# kl01 — per-source unigram KL divergence (pre-rotated, window round 5).
+# kl01 — per-source unigram KL divergence.
 # ---------------------------------------------------------------------------
 
 
@@ -2915,7 +2913,7 @@ def kl01_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# dd10 — asymmetric containment dedup (pre-rotated, window round 5).
+# dd10 — asymmetric containment dedup.
 # ---------------------------------------------------------------------------
 
 
@@ -2957,7 +2955,7 @@ def dd10_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# qa02 — per-source percentile normalization (pre-rotated, window round 5).
+# qa02 — per-source percentile normalization.
 # ---------------------------------------------------------------------------
 
 
@@ -2984,7 +2982,7 @@ def qa02_percentile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# er02 — entity clusters + golden record (pre-rotated, window round 5).
+# er02 — entity clusters + golden record.
 # ---------------------------------------------------------------------------
 
 
@@ -3025,7 +3023,7 @@ def er02_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# dp01 — per-source Welch mean-shift drift (pre-rotated, window round 5).
+# dp01 — per-source Welch mean-shift drift.
 # ---------------------------------------------------------------------------
 
 
@@ -3068,7 +3066,7 @@ def dp01_mean_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ss12 — maximum inner-product search (pre-rotated, window round 5).
+# ss12 — maximum inner-product search.
 # ---------------------------------------------------------------------------
 
 
@@ -3104,7 +3102,7 @@ def ss12_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# mm06 — perceptual-hash image near-dup (pre-rotated, window round 5).
+# mm06 — perceptual-hash image near-dup.
 # ---------------------------------------------------------------------------
 
 
@@ -3298,7 +3296,7 @@ def mm13_phash_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sp06 — exact token-budget selection (pre-rotated, window round 5).
+# sp06 — exact token-budget selection.
 # ---------------------------------------------------------------------------
 
 
@@ -7890,8 +7888,7 @@ def tp08_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round 11 — four planning/audit primitives for the training-data pipeline:
 # mx04 UniMax water-fill, qa08 calibration bins, sp15 Neyman allocation,
 # lo04 file-compaction plan. All are one corpus scan + bounded (|groups|-row)
-# reductions with pure-BIGINT emission; pre-rotated (x_ alias) until the
-# round-12 window cut.
+# reductions with pure-BIGINT emission.
 # ---------------------------------------------------------------------------
 
 _MX04_CAP = 4       # per-source epoch cap C (UniMax k)

@@ -41,408 +41,3 @@ def register(
 
 def bench_queries() -> dict[str, Query]:
     return {n: q for n, q in REGISTRY.items() if q.bench}
-
-
-# Driver-window rotation (round 12: close the rotation debt).
-# The correctness driver records rows for the FIRST 50 registered names
-# alphabetically. This round's window, derived by
-# tools/propose_rotation.py --changed q13_mod_latency under the
-# documented priority order (verdict r11 order #1):
-#   * the 4 never-driver-graded round-11 registrations
-#     (lo04_compaction_plan, mx04_unimax_waterfill, qa08_calibration_bins,
-#     sp15_neyman_allocation);
-#   * q13_mod_latency, forced via --changed: its plan is unchanged but
-#     its last green row is r7 — the stalest SURVEY §2.5 entry (Q14
-#     leap-second/modular-latency) and a verdict-ordered re-grade;
-#   * 45 stale-green backfill slots, oldest rows first — this drains
-#     the ENTIRE r4/r6 tail (incl. sn02_reconnect_pairs, SURVEY K5's
-#     stalest row): after this window grades green, every registered
-#     query has a driver-green row and the oldest green anywhere is r7.
-# Everything else (fresh r9-r11 greens, retired probes, canary) is
-# exposed under an ``x_`` alias (sorts past the 50 canonical names,
-# all < 'x'). Nothing is hidden — every query stays registered under
-# its canonical name for tests/bench and the local DuckDB parity suite
-# (tests/test_parity.py); cross-round coverage is auto-derived by
-# tools/coverage_report.py.
-DRIVER_ROTATED_OUT: frozenset[str] = frozenset(
-    {
-        "aj01_asof_join",
-        "aj02_asof_tolerance",
-        "aj03_asof_nearest",
-        "an01_rolling_zscore",
-        "an04_ewma_drift",
-        "an05_seasonal_decompose",
-        "an07_mean_excess",
-        "an08_autocorrelation",
-        "an09_theil_sen",
-        "an10_runs_test",
-        "an11_seasonal_strength",
-        "an12_period_power",
-        "bp01_bpe_train",
-        "cm01_countmin_heavy_hitters",
-        "cu01_curation_funnel",
-        "cu02_adaptive_gate",
-        "cu04_drop_reasons",
-        "cu06_threshold_sweep",
-        "cu07_gate_ablation",
-        "cu08_quality_dup_matrix",
-        "cu09_selection_bias",
-        "dc01_decontamination",
-        "dc03_thirteen_gram",
-        "dc04_fuzzy_decontamination",
-        "dd01_exact_dedup",
-        "dd03_minhash_lsh",
-        "dd04_simhash",
-        "dd05_embedding_neardup",
-        "dd07_semantic_dedup",
-        "dd08_lsh_delta",
-        "dd09_block_dedup_rebuild",
-        "dd11_bbit_minhash",
-        "dd12_quality_survivor",
-        "dd13_lsh_calibration",
-        "dd15_dup_inflation",
-        "dd16_soft_dedup",
-        "dd17_lsh_recall",
-        "dp01_mean_drift",
-        "dp03_js_matrix",
-        "dq01_table_profile",
-        "dq02_profile_approx",
-        "dq03_key_skew_profile",
-        "dq04_benford",
-        "dq06_referential_integrity",
-        "dq07_fd_audit",
-        "dq08_decimal_canary",
-        "er01_name_matching",
-        "er03_blocking_profile",
-        "er04_blocking_compare",
-        "er05_golden_record",
-        "fn01_conversion_funnel",
-        "fn02_cohort_retention",
-        "fn03_user_growth",
-        "fn08_rolling_dau",
-        "gr05_triangle_stats",
-        "gr06_kcore",
-        "hs01_length_histogram",
-        "ig01_dsir_weights",
-        "ig02_loss_aware_mix",
-        "in01_inverted_index",
-        "in02_phrase_search",
-        "in05_proximity_rank",
-        "in06_prefix_probe",
-        "in07_tfidf_cosine",
-        "in08_fuzzy_probe",
-        "in09_maxscore_bound",
-        "ks01_source_drift",
-        "lo01_zorder_code",
-        "lo02_pruning_stats",
-        "lo03_layout_matrix",
-        "lo04_compaction_plan",
-        "lr01_grouped_regression",
-        "lr02_logreg_quality",
-        "mk01_event_transitions",
-        "mk02_sequence_nll",
-        "mm01_decode_metadata",
-        "mm02_feature_extract",
-        "mm03_frame_sample",
-        "mm04_resize",
-        "mm06_phash_neardup",
-        "mm07_patch_grid",
-        "mm09_modality_census",
-        "mm10_byte_entropy",
-        "mm11_phash_16bit",
-        "mm15_silence_runs",
-        "mx01_source_overlap",
-        "mx02_mixture_epochs",
-        "mx03_epoch_schedule",
-        "mx04_unimax_waterfill",
-        "pb01_dq03_counts",
-        "pb02_dq03_share_lit",
-        "pb03_dq03_share_join",
-        "pb04_sp12_counts",
-        "pb05_sp12_means",
-        "pb06_mx02_sqrt",
-        "pb07_mx02_ratio",
-        "pb08_const_values",
-        "pb09_nation_int",
-        "pb10_qa05_bins",
-        "pb11_qa05_exact",
-        "pb12_qa05_est",
-        "pb13_tx19_docs",
-        "pb14_sp10_docs",
-        "pb15_dq03_twin",
-        "pb16_sp12_twin",
-        "q01_pricing_summary",
-        "q02_tumbling_window",
-        "q03_conditional_agg",
-        "q04_pivot_linestatus",
-        "q05_rate_normalization",
-        "q06_agg_of_agg",
-        "q07_dim_join",
-        "q08_semi_join",
-        "q09_three_way_join",
-        "q10_predicates",
-        "q11_distinct",
-        "q12_orderby_multi",
-        "q13_mod_latency",
-        "q14_coalesce_duration",
-        "q15_gap_spine",
-        "q16_json_shred",
-        "q17_latest_per_key",
-        "q18_array_agg",
-        "q19_mjd_bucket",
-        "q20_topk_per_group",
-        "q21_rollup_hierarchy",
-        "q22_no_order_customers",
-        "q23_value_deciles",
-        "q24_intersect_users",
-        "q29_grouping_sets",
-        "q30_range_frame",
-        "qa01_quantile_thresholds",
-        "qa02_percentile_normalize",
-        "qa03_robust_outliers",
-        "qa04_winsorized_mean",
-        "qa05_histogram_quantiles",
-        "qa06_gate_agreement",
-        "qa08_calibration_bins",
-        "rj01_range_join",
-        "rj02_interval_overlap",
-        "rt01_packages",
-        "rt02_observations",
-        "rt03_coordinates",
-        "rt04_text_messages",
-        "rt05_message_catalog",
-        "rt06_msm46_observations",
-        "rt07_all_constellations",
-        "rt08_legacy_observations",
-        "rt09_decode_throughput",
-        "rt10_msm123_observations",
-        "rt11_package_ledger",
-        "scd01_history",
-        "scd03_history_audit",
-        "sd01_duplicate_spans",
-        "sj01_salted_distinct",
-        "sj02_salted_join",
-        "sk01_kmv_distinct",
-        "sk02_kmv_set_algebra",
-        "sk03_kmv_jaccard",
-        "sn01_user_sessions",
-        "sn02_reconnect_pairs",
-        "sn03_native_sessions",
-        "sp01_stratified_sample",
-        "sp02_quota_per_source",
-        "sp03_source_mixing",
-        "sp04_stratified_ksample",
-        "sp05_hash_split",
-        "sp06_token_budget",
-        "sp07_epoch_order",
-        "sp08_cluster_split",
-        "sp10_pps_resample",
-        "sp11_temporal_split",
-        "sp12_systematic",
-        "sp13_weighted_reservoir",
-        "sp15_neyman_allocation",
-        "ss01_knn_bruteforce",
-        "ss04_ivf_train_step",
-        "ss05_pq_encode",
-        "ss06_ivf_probe",
-        "ss07_ivf_train_full",
-        "ss08_ann_recall",
-        "ss09_pq_adc_topk",
-        "ss10_sq8_quantize",
-        "ss11_ivfpq_search",
-        "ss12_mips_topk",
-        "ss15_power_iteration",
-        "st01_sourcetable",
-        "st02_upsert_snapshot",
-        "tk02_fertility",
-        "tp01_sequence_pack",
-        "tp02_sorted_pack",
-        "tp03_split_long_docs",
-        "tp04_pack_utilization",
-        "tp05_sliding_chunks",
-        "tp06_fim_split",
-        "tp07_curriculum_order",
-        "tp08_padding_waste",
-        "ts02_ohlc_downsample",
-        "ts03_twap_locf",
-        "ts05_downsample_extremes",
-        "ts06_gapfill_interpolate",
-        "ts07_lttb_downsample",
-        "tx01_language_id",
-        "tx02_quality_score",
-        "tx03_token_count",
-        "tx04_fingerprint",
-        "tx05_repetition",
-        "tx06_pii_scrub",
-        "tx07_unigram_surprisal",
-        "tx13_tfidf_keywords",
-        "tx14_stupid_backoff",
-        "tx15_novelty_score",
-        "tx16_langid_confusion",
-        "tx17_vocab_coverage",
-        "tx18_lexical_diversity",
-        "tx19_readability",
-        "tx20_zipf_slope",
-        "tx21_burstiness",
-        "ws01_weighted_sample",
-    }
-)
-
-
-# Queries whose PLAN changed in round 13 AFTER their last green driver
-# row — consumed by the round-13 window cut below (all are in the
-# new window). bm01/rc01/rc02/rc03 carry the shared tokenized-docs
-# persist (operators/retrieval.py, one corpus tokenize feeding the
-# stats + posting legs); kl01 derives vocab and symbol counts from one
-# persisted (source, token) relation; dc02 broadcasts the DISTINCT
-# bench hash set on the confirm join (round-13 ADVICE); tx10/cu05 ride
-# the bigram_nll struct-pair + int-vocab-id rewrite (operators/text.py,
-# value-identity pinned by test_bigram_nll_id_form_matches_string_form).
-# All re-proved hash-identical to DuckDB at sf0.001 and sf0.01 locally.
-CHANGED_SINCE_GREEN_R13: frozenset[str] = frozenset(
-    {
-        "bm01_bm25_topk",
-        "rc01_hybrid_rrf",
-        "rc02_ndcg_eval",
-        "rc03_mrr_eval",
-        "kl01_source_divergence",
-        "dc02_decontamination_bloom",
-        "tx10_bigram_nll",
-        "cu05_ccnet_buckets",
-    }
-)
-
-
-# Queries whose PLAN changed in round 12 AFTER their last green driver
-# row — pass to tools/propose_rotation.py --changed when cutting the
-# round-13 window. The ss02/ss16/ss17 plans consume the round-12
-# distance-table codegen refactor (operators/simsearch.py _dist_table:
-# one transform lambda per codebook instead of k unrolled aggregates —
-# value-identical, locally parity-green) but their last driver rows
-# (r11) predate it; every other consumer of the refactor is IN the
-# round-12 window and re-grades now.
-CHANGED_SINCE_GREEN_R12: frozenset[str] = frozenset(
-    {
-        # batch-1 codegen refactor (distance-table lambda kernel)
-        "ss02_ann_bucketed",
-        "ss16_nprobe_sweep",
-        "ss17_radius_search",
-        # batch-2 (score-free LSH candidates / mmr pool persist)
-        "sp09_cluster_split_lsh",
-        "ss14_mmr_rerank",
-        # batch-3/5 (bloom rework + fastlit literals + driver-side
-        # query constants) — every one re-proved hash-identical at
-        # sf0.001 and sf0.01 this round (see OPTIMIZATION_r12.md)
-        "dc02_decontamination_bloom",
-        "ss03_ann_lsh_multitable",
-        "ss13_sq8_recall",
-        # Round-13 verdict audit: the batch-2/3 restructures (CC
-        # localCheckpoint edges, score-free LSH candidates, capped-
-        # shingle scalar fold, tx14/cu05 persists) also changed these
-        # rotated-out plans after their newest driver-green rows — the
-        # original r12 ledger missed them (VERDICT r12 "What's wrong"
-        # #1). Added here so the r13 window cut regrades them.
-        "gr01_cluster_sizes",
-        "gr02_dup_degree",
-        "gr03_lsh_clusters",
-        "gr04_pagerank",
-        "er02_entity_clusters",
-        "dd02_ngram_jaccard",
-        "dd06_dup_clusters",
-        "dd10_containment",
-        "cu03_full_pipeline",
-        "cu05_ccnet_buckets",
-    }
-)
-
-
-# CONSUMED (historical): round 11's ledger — rt01–rt10 (the vectorized
-# decoder re-proof) all graded green in CORRECTNESS_r11. Kept for the
-# audit trail only.
-CHANGED_SINCE_GREEN_R11: frozenset[str] = frozenset(
-    {
-        "rt01_packages",
-        "rt02_observations",
-        "rt03_coordinates",
-        "rt04_text_messages",
-        "rt05_message_catalog",
-        "rt06_msm46_observations",
-        "rt07_all_constellations",
-        "rt08_legacy_observations",
-        "rt09_decode_throughput",
-        "rt10_msm123_observations",
-    }
-)
-
-
-# CONSUMED (historical): round 10's ledger. Empty by construction: the
-# round-10 emission conversion (rational_rh) touched only the in-window
-# red-latest queries (dq03/sp12/mx02/sp10/tx19) and in-window
-# never-checked tp08; the qa05 leg refactor and the gopher_rules keep_cols parameter are
-# plan-identical for their green consumers (tx11's emitted plan is
-# unchanged — parity re-verified); and the five round-10 registrations
-# (sp13, mx03, in09, ts07, cu09) are never-checked and queue under
-# that (higher) priority instead.
-CHANGED_SINCE_GREEN_R10: frozenset[str] = frozenset()
-
-
-# CONSUMED (historical): round 9's ledger — empty by construction;
-# every round-9 change landed on in-window queries. Kept for the
-# audit trail only.
-CHANGED_SINCE_GREEN_R9: frozenset[str] = frozenset()
-
-
-# CONSUMED (historical): queries whose plan changed in round 8 after
-# their last green row — the shingle-pipeline restructure. All 17 are
-# in the round-9 window above and re-grade this round; kept for the
-# audit trail only.
-CHANGED_SINCE_GREEN_R8: frozenset[str] = frozenset(
-    {
-        "cu03_full_pipeline",
-        "dc01_decontamination",
-        "dc02_decontamination_bloom",
-        "dc03_thirteen_gram",
-        "dd02_ngram_jaccard",
-        "dd08_lsh_delta",
-        "dd10_containment",
-        "dd11_bbit_minhash",
-        "dd12_quality_survivor",
-        "dd13_lsh_calibration",
-        "gr01_cluster_sizes",
-        "gr02_dup_degree",
-        "gr03_lsh_clusters",
-        "mx01_source_overlap",
-        "mx04_unimax_waterfill",
-        "mx03_epoch_schedule",
-        "sp08_cluster_split",
-        "sp09_cluster_split_lsh",
-        "tx15_novelty_score",
-    }
-)
-
-
-# PERMANENTLY RETIRED from driver grading (round 11): the 16-probe
-# attribution matrix and the DECIMAL canary. Their diagnostic job is
-# done (the round-10 rows located the HUGEINT/DECIMAL pandas-path
-# class; see plans/probes.py), their latest driver rows are red BY
-# DESIGN and will stay red forever since they no longer enter the
-# window — tools/propose_rotation.py must not surface them as
-# error-latest re-proof candidates. They stay registered and locally
-# parity-checked (dq08 on the fetchall leg only).
-DRIVER_RETIRED: frozenset[str] = frozenset(
-    {f"pb{i:02d}" for i in range(1, 17)} | {"dq08"}
-)
-
-
-def is_retired(name: str) -> bool:
-    return any(name.startswith(p) for p in DRIVER_RETIRED)
-
-
-def exposed_name(name: str) -> str:
-    """Name under which the driver sees this query (see DRIVER_ROTATED_OUT)."""
-    return f"x_{name}" if name in DRIVER_ROTATED_OUT else name
-
-
-def exposed_items() -> list[tuple[str, Query]]:
-    """(exposed_name, Query) pairs, sorted the way the driver sorts them."""
-    return sorted((exposed_name(n), q) for n, q in REGISTRY.items())

@@ -10,7 +10,6 @@ SF_ORACLE_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from ntripmonitor_spark.session import get_spark
 
     s = get_spark("ntripmonitor_spark_tests", shuffle_partitions=8)

@@ -243,36 +243,30 @@ def test_replay_clean_stop_restart_adds_nothing(spark, sf_dir, tmp_path):
 
 def test_vocab_id_mapper_matches_string_mapper(spark):
     """_vocab_id_mapper must be the index-bijection of _vocab_mapper:
-    token → vocab index if in vocab else len(vocab), including
-    SQL-hostile tokens and the empty-vocab edge."""
-    from ntripmonitor_spark.operators.text import _vocab_id_mapper
+    two tokens share an id exactly when the string mapper gives them
+    the same symbol, an in-vocab token gets its vocab index, and every
+    other token (a literal <unk> in the vocab included) gets
+    len(vocab). Covers SQL-hostile tokens and the empty-vocab edge."""
+    from ntripmonitor_spark.operators.text import _vocab_id_mapper, _vocab_mapper
 
     df = spark.createDataFrame(
-        [("alpha",), ("beta",), ("it's",), ("zzz",), ("",)], "tok string"
+        [("alpha",), ("beta",), ("it's",), ("zzz",), ("",), ("<unk>",)], "tok string"
     )
-    vocab = ["alpha", "it's", ""]
-    got = df.select(_vocab_id_mapper(vocab)("tok").alias("v")).collect()
-    idx = {w: i for i, w in enumerate(vocab)}
-    want = [idx.get(r["tok"], len(vocab)) for r in df.collect()]
-    assert [r["v"] for r in got] == want
+    for vocab in (["alpha", "it's", ""], ["alpha", "<unk>", "it's", ""], ["<unk>"], []):
+        rows = df.select(
+            _vocab_mapper(vocab)("tok").alias("s"), _vocab_id_mapper(vocab)("tok").alias("v")
+        ).collect()
+        idx = {w: i for i, w in enumerate(vocab) if w != "<unk>"}
+        assert [r["v"] for r in rows] == [idx.get(r["s"], len(vocab)) for r in rows], vocab
+        pairs = {(r["s"], r["v"]) for r in rows}
+        assert len(pairs) == len({s for s, _ in pairs}) == len({v for _, v in pairs}), vocab
 
-    empty = df.select(_vocab_id_mapper([])("tok").alias("v")).collect()
-    assert all(r["v"] == 0 for r in empty)
 
+def _bigram_nll_string_form(docs, vocab_size):
+    """bigram_nll before round 13: string pairs and string tokens."""
+    from ntripmonitor_spark.operators.text import _vocab_mapper
 
-def test_bigram_nll_id_form_matches_string_form(spark, sf_dir):
-    """bigram_nll's round-13 rewrite (struct pairs + int vocab ids)
-    must emit row-identical output to the former string-pair +
-    string-token form: the id mapping is a bijection on vocab ∪ {unk},
-    so every model count, logp and per-doc aggregate is unchanged."""
-    from ntripmonitor_spark.operators.text import _vocab_mapper, bigram_nll
-    from ntripmonitor_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents")
-    got = bigram_nll(docs).orderBy("doc_id").collect()
-
-    # the pre-round-13 reference form, inlined
-    k, vocab_size = 0.5, 64
+    k = 0.5
     toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda x: x != "")
     staged = docs.select(F.col("doc_id"), toks.alias("_toks"))
     m = F.greatest(F.size(F.col("_toks")) - 1, F.lit(0))
@@ -315,4 +309,84 @@ def test_bigram_nll_id_form_matches_string_form(spark, sf_dir):
         .collect()
     )
     mapped.unpersist()
-    assert got == want
+    return want
+
+
+def test_bigram_nll_id_form_matches_string_form(spark, sf_dir):
+    """bigram_nll's round-13 rewrite (struct pairs + int vocab ids)
+    must emit row-identical output to the former string-pair +
+    string-token form: the ids are a bijection on the string mapper's
+    symbols, so every model count, logp and per-doc aggregate is
+    unchanged. The second input puts a literal <unk> among the top
+    tokens next to out-of-vocab tokens, which the string form (and the
+    tx10/cu05 oracles) fold into one symbol."""
+    from ntripmonitor_spark.operators.text import bigram_nll
+    from ntripmonitor_spark.tables import table
+
+    unk_top = spark.createDataFrame(
+        [
+            (1, "<unk> a <unk> b <unk> c"),
+            (2, "a <unk> d e <unk>"),
+            (3, "f g <unk> a h"),
+            (4, "<unk> <unk> a b i j"),
+        ],
+        "doc_id long, text string",
+    )
+    for docs, vocab_size in ((table(spark, sf_dir, "documents"), 64), (unk_top, 4)):
+        got = bigram_nll(docs, vocab_size=vocab_size).orderBy("doc_id").collect()
+        assert got == _bigram_nll_string_form(docs, vocab_size), vocab_size
+
+
+def test_pmi_collocations_matches_persisted_grams_form(spark, sf_dir):
+    """tx12's round-13 rewrite (bigram counts persisted, unigram counts
+    and totals folded from them) must emit row-identical output to the
+    former form, which persisted the corpus-scale pair stream and
+    counted unigrams with a unionAll pass over it."""
+    from ntripmonitor_spark.operators.dedup import normalized_words, word_shingles
+    from ntripmonitor_spark.operators.text import pmi_collocations
+    from ntripmonitor_spark.tables import table
+
+    docs = table(spark, sf_dir, "documents")
+    for top_n, min_count in ((50, 5), (1000, 1)):
+        got = pmi_collocations(docs, top_n=top_n, min_count=min_count).collect()
+
+        # the pre-round-13 reference form, inlined
+        words = normalized_words(F.col("text"))
+        grams = docs.select(
+            F.explode(word_shingles(words, 2)).alias("bigram")
+        ).select(
+            F.split(F.col("bigram"), " ").getItem(0).alias("w1"),
+            F.split(F.col("bigram"), " ").getItem(1).alias("w2"),
+        ).persist()
+        bc = grams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_xy"))
+        uni = (
+            grams.select(F.col("w1").alias("tok"))
+            .unionAll(grams.select(F.col("w2").alias("tok")))
+            .groupBy("tok").agg(F.count(F.lit(1)).alias("c_tok"))
+        )
+        totals = grams.agg(F.count(F.lit(1)).alias("t_b")).select(
+            "t_b", (F.col("t_b") * 2).alias("t_u")
+        )
+        want = (
+            bc.filter(F.col("c_xy") >= min_count)
+            .join(F.broadcast(uni.withColumnRenamed("tok", "w1")
+                              .withColumnRenamed("c_tok", "c_x")), "w1")
+            .join(F.broadcast(uni.withColumnRenamed("tok", "w2")
+                              .withColumnRenamed("c_tok", "c_y")), "w2")
+            .crossJoin(F.broadcast(totals))
+            .select(
+                "w1", "w2", "c_xy",
+                F.round(
+                    F.log((F.col("c_xy").cast("double") / F.col("t_b"))
+                          / ((F.col("c_x").cast("double") / F.col("t_u"))
+                             * (F.col("c_y").cast("double") / F.col("t_u")))),
+                    6,
+                ).alias("pmi"),
+            )
+            .orderBy(F.col("pmi").desc(), F.col("w1").asc(), F.col("w2").asc())
+            .limit(top_n)
+            .collect()
+        )
+        grams.unpersist()
+        assert got, (top_n, min_count)
+        assert got == want, (top_n, min_count)

@@ -67,8 +67,8 @@ def main() -> None:
     print("  `dq08_decimal_canary`, a DELIBERATE probe that keeps the")
     print("  hypothesis falsifiable — its driver row is EXPECTED red; a")
     print("  green row would refute the hypothesis and reopen the question.")
-    print("  tests/test_driver_contract.py pins the no-DECIMAL invariant")
-    print("  for every window query except the canary.")
+    print("  tests/test_parity.py pins the no-DECIMAL invariant for every")
+    print("  registered query except the canary.")
     print()
     print("- **Ratios of exact integers emit via exact integer-rational")
     print("  round-half-up, never via quantize() of the double ratio")
@@ -91,7 +91,7 @@ def main() -> None:
     print("  byte-identical renamed twins that test for name-keyed grading")
     print("  state. Their red/green split IS the attribution; interpretation")
     print("  table in the module docstring, expected outcomes in SCALE.md")
-    print("  §6t. They retire from the window once the diagnosis lands.")
+    print("  §6t.")
     print()
     print("- **Every integer aggregate in an oracle's final SELECT is")
     print("  `CAST(... AS BIGINT)` (decision made round 11 — the probe")
@@ -113,10 +113,7 @@ def main() -> None:
     print("  in a pandas fetch, so prefer `coalesce(..., sentinel)` on both")
     print("  sides over NULL next to >2^53 magnitudes (ts07's `area` → -1;")
     print("  nullable-BIGINT emitters with NULLs on BOTH sides have graded")
-    print("  green — aj01 r4 — so existing ones stand). With the class")
-    print("  closed, the 16 pb probes and the dq08 canary retired from the")
-    print("  window to `x_` aliases (round-10 orders #3/#4) — no")
-    print("  expected-red row consumes a window slot anymore.")
+    print("  green — aj01 r4 — so existing ones stand).")
 
 
 if __name__ == "__main__":
