@@ -60,15 +60,20 @@ def string_array_lit(values: list[str]) -> Column:
     return F.expr(f"array({','.join(_render_string(v) for v in values)})")
 
 
-def string_map_lit(pairs: dict[str, str]) -> Column:
-    """map<string,string> literal — one py4j call for any size
-    (vs 2·N ``F.lit`` round trips for ``F.create_map``). Insertion
-    order of ``pairs`` is preserved, matching create_map's argument
-    order."""
+def string_map_sql(pairs: dict[str, str]) -> str:
+    """map<string,string> literal as SQL text, for embedding in a
+    larger expression string. Insertion order of ``pairs`` is
+    preserved, matching create_map's argument order."""
     args = ",".join(
         f"{_render_string(k)},{_render_string(v)}" for k, v in pairs.items()
     )
-    return F.expr(f"map({args})")
+    return f"map({args})"
+
+
+def string_map_lit(pairs: dict[str, str]) -> Column:
+    """map<string,string> literal — one py4j call for any size
+    (vs 2·N ``F.lit`` round trips for ``F.create_map``)."""
+    return F.expr(string_map_sql(pairs))
 
 
 def string_double_map_lit(pairs: dict[str, float]) -> Column:

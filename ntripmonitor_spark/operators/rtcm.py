@@ -3,7 +3,7 @@
 Split of labor (SURVEY.md §2.2, §3.1):
 
 * **Bit-level decode** (sub-byte fields — P1, P2, P7-P9, P5, P11) runs
-  in ONE Arrow-batched ``mapInPandas`` stage producing the nested
+  in ONE Arrow-batched ``mapInArrow`` stage producing the nested
   ``DECODED_SCHEMA`` IR. This is the only Python in the path; a bad
   frame yields a null-typed row instead of failing the batch
   (error-tolerant decode, cf. src/decoderclasses.py:59-69).
@@ -30,17 +30,16 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ntripmonitor_spark.functions.bitio import BitReader
 from ntripmonitor_spark.functions.crc24q import frame_crc_ok
-from ntripmonitor_spark.functions.fastlit import string_map_lit
+from ntripmonitor_spark.functions.fastlit import string_map_sql
 from ntripmonitor_spark.schema import (
+    CONSTELLATION_IDS,
     DECODED_SCHEMA,
     MSM_SIGNAL_TYPES,
-    constellation_col,
+    constellation_sql,
 )
 
 _MSM_RANGES = ((1071, 1077), (1081, 1087), (1091, 1097), (1101, 1107), (1111, 1117), (1121, 1127))
@@ -258,24 +257,6 @@ def _decode_one(frame: bytes) -> dict:
     return out
 
 
-def decode_frames_rowwise(frames: DataFrame) -> DataFrame:
-    """Row-wise (BitReader-per-frame) decode — the readable reference
-    implementation; ``decode_frames`` below is the vectorized
-    production path and is golden-tested against this one."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mp, rt, fr in zip(pdf["mountpoint"], pdf["receive_time"], pdf["frame"]):
-                d = _decode_one(bytes(fr))
-                d["mountpoint"] = mp
-                d["receive_time"] = rt
-                rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
-
-    return frames.mapInPandas(gen, schema=DECODED_SCHEMA)
-
-
 def decode_frames(frames: DataFrame) -> DataFrame:
     """(mountpoint, receive_time, frame) → nested DECODED_SCHEMA rows.
 
@@ -325,7 +306,13 @@ def decode_blobs(blobs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Epoch reconstruction (P15) — pure column expressions, µs-exact.
+# Epoch reconstruction (P15) and the projections (P12-P17), written as
+# Spark SQL text: one selectExpr/where call per plan step. Every F.* call
+# or Column operator is a py4j round trip, and the foreachBatch sinks
+# rebuild these projections on every micro-batch; as text each costs a
+# few dozen round trips at most (pinned by
+# tests/test_rtcm_sql_projections.py). Double literals carry a ``D``
+# suffix: a bare ``1024.0`` in Spark SQL is DECIMAL(5,1).
 # ---------------------------------------------------------------------------
 
 _US_DAY = 86_400_000_000
@@ -333,58 +320,57 @@ _US_5H = 5 * 3600 * 1_000_000
 _US_3H = 3 * 3600 * 1_000_000
 
 
-def obs_epoch_col(receive_time: Column, epoch_ms: Column, msg_type: Column) -> Column:
+def obs_epoch_sql(receive_time: str, epoch_ms: str, msg_type: str) -> str:
     """Deterministic gnssEpochStr (src/decoderclasses.py:17-52) with
-    ``receive_time`` playing the wall clock, in exact integer µs:
+    ``receive_time`` playing the wall clock, in exact integer µs, as a
+    SQL expression over the three named columns:
 
       obsSec = (epoch_ms/1000) % 86400 ; us = (epoch_ms%1000)*1000
       if obsSec - nowSecOfDay < -5h: next day
       GLONASS types (1009-1012, 1081-1087): −3 h
     """
-    # epoch_us, not raw unix_micros: receive_time is LTZ on every
-    # in-repo path, but an NTZ-typed source (the r3 driver-error class)
-    # must degrade to a no-op cast, not an AnalysisException.
-    from ntripmonitor_spark.functions.timeutil import epoch_us
+    # The explicit TIMESTAMP_LTZ cast (functions.timeutil.epoch_us):
+    # receive_time is LTZ on every in-repo path, but an NTZ-typed source
+    # must degrade to a no-op cast, not an AnalysisException from
+    # unix_micros.
+    now_us = f"unix_micros(CAST({receive_time} AS TIMESTAMP_LTZ))"
+    obs_sec = f"(CAST({epoch_ms} / 1000 AS BIGINT) % 86400)"
+    candidate = (
+        f"CAST({now_us} / {_US_DAY}L AS BIGINT) * {_US_DAY}L"
+        f" + {obs_sec} * 1000000 + ({epoch_ms} % 1000) * 1000"
+    )
+    rollover = (
+        f"CASE WHEN {obs_sec} * 1000000 - ({now_us} % {_US_DAY}L) < -{_US_5H}L"
+        f" THEN {_US_DAY}L ELSE 0L END"
+    )
+    glonass = (
+        f"CASE WHEN {msg_type} BETWEEN 1009 AND 1012 OR {msg_type} BETWEEN 1081 AND 1087"
+        f" THEN {_US_3H}L ELSE 0L END"
+    )
+    return f"timestamp_micros({candidate} + {rollover} - {glonass})"
 
-    now_us = epoch_us(receive_time)
-    day_start_us = (now_us / _US_DAY).cast("long") * _US_DAY
-    obs_sec = (epoch_ms / 1000).cast("long") % 86400
-    frac_us = (epoch_ms % 1000) * 1000
-    candidate = day_start_us + obs_sec * 1_000_000 + frac_us
-    rolled = F.when(
-        obs_sec * 1_000_000 - (now_us % _US_DAY) < -_US_5H, candidate + _US_DAY
-    ).otherwise(candidate)
-    is_glonass = msg_type.between(1009, 1012) | msg_type.between(1081, 1087)
-    adjusted = F.when(is_glonass, rolled - _US_3H).otherwise(rolled)
-    return F.timestamp_micros(adjusted)
 
-
-# ---------------------------------------------------------------------------
-# Projections: envelope (P16) and observations (P12-P14, P17)
-# ---------------------------------------------------------------------------
+_OBS_EPOCH = obs_epoch_sql("receive_time", "epoch_ms", "msg_type")
+_IS_MSM = "msg_type BETWEEN 1071 AND 1127"
 
 
 def packages(decoded: DataFrame) -> DataFrame:
     """Envelope projection (src/decoderclasses.py:100-122): obs_epoch
     and sat_count only for MSM types."""
-    is_msm = F.col("msg_type").between(1071, 1127)
-    return decoded.select(
+    return decoded.selectExpr(
         "mountpoint",
         "receive_time",
-        F.when(is_msm, obs_epoch_col(F.col("receive_time"), F.col("epoch_ms"), F.col("msg_type")))
-        .alias("obs_epoch"),
+        f"CASE WHEN {_IS_MSM} THEN {_OBS_EPOCH} END AS obs_epoch",
         "msg_type",
         "msg_size",
-        F.when(is_msm, F.size("sats")).cast("int").alias("sat_count"),
+        f"CASE WHEN {_IS_MSM} THEN size(sats) END AS sat_count",
     )
 
 
-def _signal_name_map() -> Column:
-    """map<'CONST|slot', name> literal for the P13 lookup (tiny,
-    constant-folded; the join-free alternative to signal_dim). Built
-    as ONE SQL map expression (round-13, guide §5): the per-entry
-    ``F.lit`` form paid 2·192 py4j round trips per plan build."""
-    return string_map_lit({
+def _signal_name_map() -> str:
+    """map<'CONST|slot', name> SQL literal for the P13 lookup (tiny,
+    constant-folded; the join-free alternative to signal_dim)."""
+    return string_map_sql({
         f"{const}|{slot}": name
         for const, names in MSM_SIGNAL_TYPES.items()
         for slot, name in enumerate(names)
@@ -399,65 +385,51 @@ def observations(decoded: DataFrame) -> DataFrame:
     the satellite block, sigNo = p mod nsig indexes the masked signal
     list, and the k-th cell record carries the fine values.
     """
-    level = F.col("msg_type") % 10
-    d = (
-        decoded.filter(F.col("msg_type").between(1071, 1127) & F.col("cells").isNotNull())
-        .withColumn("constellation", constellation_col(F.col("msg_type")))
-        .withColumn("constellation_id", F.element_at(
-            string_map_lit({
-                "GPS": "G", "GLONASS": "R", "GALILEO": "E",
-                "SBAS": "S", "QZSS": "J", "BEIDOU": "C",
-            }),
-            F.col("constellation"),
-        ))
-        .withColumn("nsig", F.size("sig_slots"))
-        .withColumn("obs_epoch", obs_epoch_col(F.col("receive_time"), F.col("epoch_ms"), F.col("msg_type")))
-    )
-
     # k-th cell ↔ k-th set position: zip then explode (P10's transpose
     # analog — one generator, no Python). The slot/position arrays are
     # decoder-precomputed integers (DECODED_SCHEMA), so no mask-string
     # parsing happens JVM-side.
-    d = d.withColumn("cellz", F.arrays_zip("cell_slots", "cells")).select(
-        "mountpoint", "obs_epoch", "msg_type", "constellation", "constellation_id",
-        "sat_slots", "sig_slots", "nsig", F.explode("cellz").alias("cz"), "sats",
+    d = decoded.where(f"{_IS_MSM} AND cells IS NOT NULL").selectExpr(
+        "mountpoint",
+        f"{_OBS_EPOCH} AS obs_epoch",
+        "msg_type",
+        f"{constellation_sql('msg_type')} AS constellation",
+        "sat_slots",
+        "sig_slots",
+        "size(sig_slots) AS nsig",
+        "explode(arrays_zip(cell_slots, cells)) AS cz",
+        "sats",
     )
-    pos = F.col("cz.cell_slots")
-    cell = F.col("cz.cells")
-    sat_no = (pos / F.col("nsig")).cast("int")
-    sig_no = (pos % F.col("nsig")).cast("int")
-    sat = F.element_at(F.col("sats"), sat_no + 1)
+    sat_no = "CAST(cz.cell_slots / nsig AS INT)"
+    sig_no = "cz.cell_slots % nsig"
+    sat = f"element_at(sats, {sat_no} + 1)"
+    cell = "cz.cells"
 
     # MSM1-5 carry the 15/22-bit fine fields (2^-24 / 2^-29, CNR 1 dB);
     # MSM6/7 the high-res 20/24-bit ones (2^-29 / 2^-31, CNR 2^-4).
     # MSM1-3 satellites have no int_ms: their ranges are rough-range
     # mod 1 ms only (RTCM DF398), so `rough` is the fractional term
     # alone and absent fine fields null out code/phase/snr/doppler.
-    lvl = F.col("msg_type") % 10
-    lo_res = lvl <= 5
-    code_fine = F.when(lo_res, F.pow(2.0, -24)).otherwise(F.pow(2.0, -29))
-    phase_fine = F.when(lo_res, F.pow(2.0, -29)).otherwise(F.pow(2.0, -31))
-    snr_scale = F.when(lvl.isin(4, 5), F.lit(1.0)).otherwise(F.pow(2.0, -4))
-    frac = sat.getField("mod1ms") / F.lit(1024.0)
-    rough = F.when(lvl <= 3, frac).otherwise(sat.getField("int_ms") + frac)
-
-    sig_map = _signal_name_map()
-    return d.select(
+    lvl = "msg_type % 10"
+    code_fine = f"CASE WHEN {lvl} <= 5 THEN pow(2.0D, -24) ELSE pow(2.0D, -29) END"
+    phase_fine = f"CASE WHEN {lvl} <= 5 THEN pow(2.0D, -29) ELSE pow(2.0D, -31) END"
+    snr_scale = f"CASE WHEN {lvl} IN (4, 5) THEN 1.0D ELSE pow(2.0D, -4) END"
+    frac = f"{sat}.mod1ms / 1024.0D"
+    rough = f"CASE WHEN {lvl} <= 3 THEN {frac} ELSE {sat}.int_ms + {frac} END"
+    const_id = f"element_at({string_map_sql(CONSTELLATION_IDS)}, constellation)"
+    return d.selectExpr(
         "mountpoint",
         "obs_epoch",
         "msg_type",
-        F.format_string(
-            "%s%02d", F.col("constellation_id"), F.element_at(F.col("sat_slots"), sat_no + 1) + 1
-        ).alias("sat_id"),
-        F.element_at(
-            sig_map,
-            F.concat_ws("|", F.col("constellation"), F.element_at(F.col("sig_slots"), sig_no + 1)),
-        ).alias("sat_signal"),
-        (rough + cell.getField("fine_code") * code_fine).alias("code"),
-        (rough + cell.getField("fine_phase") * phase_fine).alias("phase"),
-        (sat.getField("rough_rate") + cell.getField("fine_rate") * F.lit(0.0001)).alias("doppler"),
-        (cell.getField("cnr") * snr_scale).alias("snr"),
-        cell.getField("lock").alias("lock"),
+        f"format_string('%s%02d', {const_id}, element_at(sat_slots, {sat_no} + 1) + 1)"
+        " AS sat_id",
+        f"element_at({_signal_name_map()},"
+        f" concat_ws('|', constellation, element_at(sig_slots, {sig_no} + 1))) AS sat_signal",
+        f"{rough} + {cell}.fine_code * {code_fine} AS code",
+        f"{rough} + {cell}.fine_phase * {phase_fine} AS phase",
+        f"{sat}.rough_rate + {cell}.fine_rate * 0.0001D AS doppler",
+        f"{cell}.cnr * {snr_scale} AS snr",
+        f"{cell}.lock AS lock",
         "constellation",
     )
 
@@ -473,46 +445,39 @@ def legacy_observations(decoded: DataFrame) -> DataFrame:
     1012), phaserange = pseudorange + diff·0.0005 m, CNR in 0.25 dB-Hz
     steps, GLONASS frequency channel = fcn − 7.
     """
-    d = (
-        decoded.filter(
-            (F.col("msg_type").between(1001, 1004) | F.col("msg_type").between(1009, 1012))
-            & F.col("legacy").isNotNull()
-        )
-        .withColumn("constellation", constellation_col(F.col("msg_type")))
-        .withColumn("obs_epoch", obs_epoch_col(F.col("receive_time"), F.col("epoch_ms"), F.col("msg_type")))
-        .select(
-            "mountpoint", "obs_epoch", "msg_type", "station_id", "constellation",
-            F.explode("legacy").alias("rec"),
-        )
+    d = decoded.where(
+        "(msg_type BETWEEN 1001 AND 1004 OR msg_type BETWEEN 1009 AND 1012)"
+        " AND legacy IS NOT NULL"
+    ).selectExpr(
+        "mountpoint",
+        f"{_OBS_EPOCH} AS obs_epoch",
+        "msg_type",
+        "station_id",
+        f"{constellation_sql('msg_type')} AS constellation",
+        "explode(legacy) AS rec",
     )
-    rec = F.col("rec")
-    amb_m = F.coalesce(rec.getField("l1_amb"), F.lit(0)) * F.lit(299792.458)
-    l1_pr_m = amb_m + rec.getField("l1_pr") * F.lit(0.02)
-    l2_pr_m = amb_m + rec.getField("l2_pr") * F.lit(0.02)
-    return d.select(
+    amb_m = "coalesce(rec.l1_amb, 0) * 299792.458D"
+    l1_pr_m = f"({amb_m} + rec.l1_pr * 0.02D)"
+    l2_pr_m = f"({amb_m} + rec.l2_pr * 0.02D)"
+    return d.selectExpr(
         "mountpoint",
         "obs_epoch",
         "msg_type",
         "station_id",
-        F.format_string(
-            "%s%02d",
-            F.when(F.col("constellation") == "GLONASS", F.lit("R")).otherwise(F.lit("G")),
-            rec.getField("sat_id_raw"),
-        ).alias("sat_id"),
-        (rec.getField("fcn") - 7).alias("freq_channel"),
-        rec.getField("l1_code").alias("l1_code"),
-        l1_pr_m.alias("l1_pseudorange_m"),
-        (l1_pr_m + rec.getField("l1_phr_diff") * F.lit(0.0005)).alias("l1_phaserange_m"),
-        rec.getField("l1_lock").alias("l1_lock"),
-        (rec.getField("l1_cnr") * F.lit(0.25)).alias("l1_cnr_dbhz"),
-        rec.getField("l2_code").alias("l2_code"),
-        F.when(rec.getField("l2_pr").isNotNull(), l2_pr_m).alias("l2_pseudorange_m"),
-        F.when(
-            rec.getField("l2_pr").isNotNull(),
-            l2_pr_m + rec.getField("l2_phr_diff") * F.lit(0.0005),
-        ).alias("l2_phaserange_m"),
-        rec.getField("l2_lock").alias("l2_lock"),
-        (rec.getField("l2_cnr") * F.lit(0.25)).alias("l2_cnr_dbhz"),
+        "format_string('%s%02d', CASE WHEN constellation = 'GLONASS' THEN 'R' ELSE 'G' END,"
+        " rec.sat_id_raw) AS sat_id",
+        "rec.fcn - 7 AS freq_channel",
+        "rec.l1_code AS l1_code",
+        f"{l1_pr_m} AS l1_pseudorange_m",
+        f"{l1_pr_m} + rec.l1_phr_diff * 0.0005D AS l1_phaserange_m",
+        "rec.l1_lock AS l1_lock",
+        "rec.l1_cnr * 0.25D AS l1_cnr_dbhz",
+        "rec.l2_code AS l2_code",
+        f"CASE WHEN rec.l2_pr IS NOT NULL THEN {l2_pr_m} END AS l2_pseudorange_m",
+        f"CASE WHEN rec.l2_pr IS NOT NULL THEN {l2_pr_m} + rec.l2_phr_diff * 0.0005D END"
+        " AS l2_phaserange_m",
+        "rec.l2_lock AS l2_lock",
+        "rec.l2_cnr * 0.25D AS l2_cnr_dbhz",
         "constellation",
     )
 
@@ -520,13 +485,13 @@ def legacy_observations(decoded: DataFrame) -> DataFrame:
 def coordinates(decoded: DataFrame) -> DataFrame:
     """1005/1006 ARP decode + 1e-4 scaling (P5-P6,
     src/decoderclasses.py:142-158)."""
-    return decoded.filter(F.col("msg_type").isin(1005, 1006)).select(
+    return decoded.where("msg_type IN (1005, 1006)").selectExpr(
         "mountpoint",
         "receive_time",
         "msg_type",
         "station_id",
-        (F.col("ecef_x") / 1e4).alias("ecef_x_m"),
-        (F.col("ecef_y") / 1e4).alias("ecef_y_m"),
-        (F.col("ecef_z") / 1e4).alias("ecef_z_m"),
-        (F.col("ant_height") / 1e4).alias("ant_height_m"),
+        "ecef_x / 10000.0D AS ecef_x_m",
+        "ecef_y / 10000.0D AS ecef_y_m",
+        "ecef_z / 10000.0D AS ecef_z_m",
+        "ant_height / 10000.0D AS ant_height_m",
     )

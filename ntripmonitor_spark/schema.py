@@ -12,7 +12,6 @@ they are tiny, immutable, and derived from the published standard
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -307,14 +306,17 @@ def constellation_of(msg_type: int) -> str:
     return "GNSS"
 
 
-def constellation_col(msg_type) -> F.Column:
-    """Column form of ``constellation_of`` (P12) — a when() chain, so
-    it stays inside whole-stage codegen."""
-    c = msg_type
-    expr = F.when(c.between(1001, 1004), F.lit("GPS")).when(c.between(1009, 1012), F.lit("GLONASS"))
-    for hundreds, name in MSM_CONSTELLATIONS.items():
-        expr = expr.when((c >= hundreds * 10 + 1) & (c <= hundreds * 10 + 7), F.lit(name))
-    return expr.otherwise(F.lit("GNSS"))
+def constellation_sql(msg_type: str) -> str:
+    """SQL text form of ``constellation_of`` (P12) over the named
+    column — a CASE chain, so it stays inside whole-stage codegen."""
+    msm = " ".join(
+        f"WHEN {msg_type} BETWEEN {h * 10 + 1} AND {h * 10 + 7} THEN '{name}'"
+        for h, name in MSM_CONSTELLATIONS.items()
+    )
+    return (
+        f"CASE WHEN {msg_type} BETWEEN 1001 AND 1004 THEN 'GPS'"
+        f" WHEN {msg_type} BETWEEN 1009 AND 1012 THEN 'GLONASS' {msm} ELSE 'GNSS' END"
+    )
 
 
 def signal_dim(spark: SparkSession) -> DataFrame:

@@ -92,7 +92,7 @@ def test_signal_name_map_matches_per_element_form(spark):
     from ntripmonitor_spark.operators.rtcm import _signal_name_map
     from ntripmonitor_spark.schema import MSM_SIGNAL_TYPES
 
-    got = spark.range(1).select(_signal_name_map().alias("m")).first()["m"]
+    got = spark.range(1).selectExpr(f"{_signal_name_map()} AS m").first()["m"]
     ref = {
         f"{const}|{slot}": name
         for const, names in MSM_SIGNAL_TYPES.items()

@@ -138,32 +138,55 @@ def test_framing_stream_carryover():
     assert got == [f1, f2]
 
 
-def test_obs_epoch_reconstruction(spark):
-    from pyspark.sql import functions as F
-    from ntripmonitor_spark.operators.rtcm import obs_epoch_col
+_EPOCH_ROWS = [
+    # (receive_time, epoch_ms, msg_type) → expected obs_epoch
+    # plain same-day GPS
+    (dt.datetime(2024, 1, 2, 12, 0, 1), 43_200_123, 1077,
+     dt.datetime(2024, 1, 2, 12, 0, 0, 123000)),
+    # rollover: obs 6 h behind wall clock → bumped to next day
+    (dt.datetime(2024, 1, 2, 23, 30, 0), 63_000_000, 1077,  # 17:30
+     dt.datetime(2024, 1, 3, 17, 30, 0)),
+    # GLONASS −3 h
+    (dt.datetime(2024, 1, 2, 12, 0, 1), 43_200_000, 1087,
+     dt.datetime(2024, 1, 2, 9, 0, 0)),
+    # non-GLONASS legacy range untouched
+    (dt.datetime(2024, 1, 2, 12, 0, 1), 43_200_000, 1009,
+     dt.datetime(2024, 1, 2, 9, 0, 0)),
+]
 
-    rows = [
-        # (receive_time, epoch_ms, msg_type) → expected obs_epoch
-        # plain same-day GPS
-        (dt.datetime(2024, 1, 2, 12, 0, 1), 43_200_123, 1077,
-         dt.datetime(2024, 1, 2, 12, 0, 0, 123000)),
-        # rollover: obs 6 h behind wall clock → bumped to next day
-        (dt.datetime(2024, 1, 2, 23, 30, 0), 63_000_000, 1077,  # 17:30
-         dt.datetime(2024, 1, 3, 17, 30, 0)),
-        # GLONASS −3 h
-        (dt.datetime(2024, 1, 2, 12, 0, 1), 43_200_000, 1087,
-         dt.datetime(2024, 1, 2, 9, 0, 0)),
-        # non-GLONASS legacy range untouched
-        (dt.datetime(2024, 1, 2, 12, 0, 1), 43_200_000, 1009,
-         dt.datetime(2024, 1, 2, 9, 0, 0)),
-    ]
-    df = spark.createDataFrame(
-        [(r, e, t) for r, e, t, _ in rows],
+
+def _epoch_frame(spark):
+    return spark.createDataFrame(
+        [(r, e, t) for r, e, t, _ in _EPOCH_ROWS],
         "receive_time timestamp, epoch_ms long, msg_type int",
-    ).withColumn("obs", obs_epoch_col(F.col("receive_time"), F.col("epoch_ms"), F.col("msg_type")))
+    )
+
+
+def test_obs_epoch_reconstruction(spark):
+    from ntripmonitor_spark.operators.rtcm import obs_epoch_sql
+
+    rows = _EPOCH_ROWS
+    df = _epoch_frame(spark).selectExpr(
+        "*", f"{obs_epoch_sql('receive_time', 'epoch_ms', 'msg_type')} AS obs"
+    )
     got = [r["obs"] for r in df.orderBy("msg_type").collect()]
     want = [rows[3][3], rows[0][3], rows[1][3], rows[2][3]]
     assert got == want
+
+
+def test_obs_epoch_over_ntz_receive_time(spark):
+    """An NTZ-typed receive_time gives the same epochs as LTZ (the
+    guard cast in obs_epoch_sql), not an AnalysisException."""
+    from ntripmonitor_spark.operators.rtcm import obs_epoch_sql
+
+    obs = f"{obs_epoch_sql('receive_time', 'epoch_ms', 'msg_type')} AS obs"
+    ltz = _epoch_frame(spark)
+    ntz = ltz.selectExpr("CAST(receive_time AS TIMESTAMP_NTZ) AS receive_time",
+                         "epoch_ms", "msg_type")
+    assert dict(ntz.dtypes)["receive_time"] == "timestamp_ntz"
+    got = [r["obs"] for r in ntz.selectExpr("msg_type", obs).orderBy("msg_type").collect()]
+    want = [r["obs"] for r in ltz.selectExpr("msg_type", obs).orderBy("msg_type").collect()]
+    assert got == want and None not in got
 
 
 def test_signal_tables_shape():
