@@ -33,9 +33,8 @@ canonicalizes DECIMAL *output* columns differently from our local
 replica (every DECIMAL-emitting query hash-red twice, every
 integer-emitting one green; gr04's red→green flip after going
 all-integer was the controlled proof). ``int_to_dec``/``dec_fixed``
-remain ONLY for internal exact-sum carriers and the deliberate
-``dq08_decimal_canary`` falsifiability probe — never for final
-output columns.
+remain ONLY for internal exact-sum carriers — never for final output
+columns (tests/test_parity.py checks every registered query).
 
 Both sides must apply textually identical operation order; the
 ``*_sql`` twins below generate the DuckDB expression for the Spark

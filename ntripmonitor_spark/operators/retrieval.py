@@ -715,10 +715,9 @@ def maxscore_bound(docs: DataFrame, queries: list[tuple[int, list[str]]],
     # cache instead — same leak, smaller; this leaves cache state clean.
     # eager_release=False keeps the full lazy plan (for .explain /
     # tools/plan_audit.py) at the cost of the persisted relation
-    # living until the session drops it. Bench comparability: bench.py
-    # times fn()+action together, so the eager execution here is fully
-    # charged to in09's timing (its r11+ numbers measure the same work
-    # as pre-r11, just moved into the builder — round-11 ADVICE).
+    # living until the session drops it. A timing of fn()+action
+    # charges the eager execution here fully to in09 (the same work as
+    # pre-r11, just moved into the builder — round-11 ADVICE).
     if not eager_release:
         return out
     rows = out.collect()

@@ -574,9 +574,8 @@ def cluster_split(docs: DataFrame, n: int = 3, threshold: float = 0.6,
 def pps_stage(docs: DataFrame, id_col: str = "doc_id",
               size_col: str = "n_chars", group_col: str = "source",
               buckets: int = BUCKETS) -> DataFrame:
-    """The per-doc PPS keep-decision stage shared by
-    :func:`pps_resample` (sp10) and the round-10 localization probe
-    (plans/probes.py: pb14): (id, group, size, cutoff, bucket). The
+    """The per-doc PPS keep-decision stage of :func:`pps_resample`
+    (sp10): (id, group, size, cutoff, bucket). The
     cutoff clamp(1, buckets, size*buckets div max) is pure BIGINT
     integral division — `div` truncation == floor for these
     non-negative longs, and no double is constructed (the prior DOUBLE

@@ -124,19 +124,16 @@ def histogram_quantiles(df: DataFrame, value_col: str = "value",
     return out.join(exact, "g").select(*cols)
 
 
-# The qa05 internals are exposed as standalone leg builders so the
-# round-10 probe matrix (plans/probes.py: pb10/pb11/pb12) can grade each
-# construct in isolation under the driver — the composed plan in
-# histogram_quantiles is unchanged (same double chains, same persisted
-# relations via the memoizing caches below).
+# The qa05 internals are standalone leg builders (the histogram state
+# and the two interpolation legs) composed by histogram_quantiles; the
+# tests check each leg against the composed query.
 #
-# The memo keys on the INPUT plan's semanticHash + builder params, so a
-# sweep that runs qa05 and its three probe legs back-to-back persists
-# the corpus-sized ranked relation and the bounded cum relation ONCE
-# per input, not once per call (round-10 ADVICE: the prior docstring
-# claimed this cache before it existed). Entries live for the session —
-# bounded by the handful of sf_dirs a run touches, and reuse beats
-# unpersist for relations that three registered queries share.
+# The memo keys on the INPUT plan's semanticHash + builder params, so
+# repeated qa05/qa08 calls persist the corpus-sized ranked relation and
+# the bounded cum relation ONCE per input, not once per call (round-10
+# ADVICE: the prior docstring claimed this cache before it existed).
+# Entries live for the session — bounded by the handful of sf_dirs a
+# run touches.
 
 _HQ_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
@@ -154,9 +151,10 @@ def _hq_memoized(kind: str, df: DataFrame, params: tuple, build) -> DataFrame:
         # makes the lookup exact; on mismatch fall through to a fresh
         # build (un-memoized — collisions are ~never, so no chain).
         if df.sameSemantics(cached_input):
-            # A catalog.clearCache() (bench.py drains dead state between
-            # timed queries) strips the persist marker; re-arm it so a
-            # multi-consumer plan doesn't silently degrade to N scans.
+            # A caller's catalog.clearCache() (the plan tests and the
+            # corpus benchmark drain cached state) strips the persist
+            # marker; re-arm it so a multi-consumer plan doesn't
+            # silently degrade to N scans.
             if cached.storageLevel.useMemory is False and cached.storageLevel.useDisk is False:
                 cached.persist()
             return cached
@@ -170,8 +168,7 @@ def clear_hq_memo() -> None:
     """Unpersist and drop every memoized relation (round-11 ADVICE: the
     memo never evicted, so a sweep over many sf_dirs accumulated
     corpus-sized persisted blocks for the process lifetime). Call
-    between sf_dirs in sweeps (tools/scale10x.py does); bench.py's
-    per-query clearCache already unpersists the blocks there."""
+    between sf_dirs in sweeps (tools/scale10x.py does)."""
     for _, cached in _HQ_MEMO.values():
         try:
             cached.unpersist()

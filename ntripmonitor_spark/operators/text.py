@@ -1164,8 +1164,7 @@ def tokenizer_fertility(docs: DataFrame, source_col: str = "source",
 def doc_readability(docs: DataFrame, source_col: str = "source",
                     text_col: str = "text",
                     keep_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Per-doc readability stage shared by :func:`readability` (tx19)
-    and the round-10 localization probe (plans/probes.py: pb13):
+    """Per-doc readability stage of :func:`readability` (tx19):
     (source, n_words, f_milli, scored) plus any ``keep_cols`` (e.g.
     doc_id — Catalyst prunes it when the aggregate doesn't need it).
     f_milli is the exact integer-rational round-half-up of flesch*1000

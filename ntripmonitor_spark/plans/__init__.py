@@ -8,5 +8,5 @@ training-data-pipeline extensions) as a named query with
 Import side effects register everything into ``registry.REGISTRY``.
 """
 
-from ntripmonitor_spark.plans import relational, pipeline, rtcm, sessions_plans, sourcetable_plans, joins_plans, retrieval_plans, timeseries_plans, skew_plans, media_plans, probes  # noqa: F401
-from ntripmonitor_spark.plans.registry import REGISTRY, Query, bench_queries  # noqa: F401
+from ntripmonitor_spark.plans import relational, pipeline, rtcm, sessions_plans, sourcetable_plans, joins_plans, retrieval_plans, timeseries_plans, skew_plans, media_plans  # noqa: F401
+from ntripmonitor_spark.plans.registry import REGISTRY, Query  # noqa: F401

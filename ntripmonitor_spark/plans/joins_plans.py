@@ -15,7 +15,6 @@ from ntripmonitor_spark.tables import table
 
 @register(
     "aj01_asof_join",
-    bench=True,
     tags=("joins",),
     oracle="""
 WITH r AS (SELECT event_id, user_id, ts FROM events WHERE event_type <> 'error'),
@@ -35,7 +34,6 @@ def aj01_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rj01_range_join",
-    bench=True,
     tags=("joins",),
     oracle="""
 WITH r AS (SELECT event_id, user_id, ts FROM events WHERE event_type <> 'error'),
@@ -60,7 +58,6 @@ def rj01_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "aj02_asof_tolerance",
-    bench=True,
     tags=("joins",),
     oracle="""
 WITH r AS (SELECT event_id, user_id, ts FROM events WHERE event_type <> 'error'),
@@ -86,7 +83,6 @@ def aj02_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn01_conversion_funnel",
-    bench=True,
     tags=("joins", "analytics"),
     oracle="""
 WITH s1 AS (
@@ -122,7 +118,6 @@ def fn01_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn02_cohort_retention",
-    bench=True,
     tags=("joins", "analytics"),
     oracle="""
 WITH t AS (
@@ -145,7 +140,6 @@ def fn02_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scd01_history",
-    bench=True,
     tags=("joins", "warehouse"),
     oracle="""
 WITH runs AS (
@@ -174,7 +168,6 @@ def scd01_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "aj03_asof_nearest",
-    bench=True,
     tags=("joins",),
     oracle="""
 WITH r AS (SELECT event_id, user_id, ts FROM events WHERE event_type <> 'error'),
@@ -212,7 +205,6 @@ def aj03_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rj02_interval_overlap",
-    bench=True,
     tags=("joins",),
     oracle="""
 WITH a AS (
@@ -244,7 +236,6 @@ def rj02_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn03_user_growth",
-    bench=True,
     tags=("funnel",),
     doc="Daily active / new / cumulative users in two bounded aggregates.",
     oracle="""
@@ -289,7 +280,6 @@ def fn03_user_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn05_window_funnel",
-    bench=True,
     tags=("joins", "analytics"),
     oracle="""
 WITH e AS (
@@ -339,7 +329,6 @@ def fn05_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn06_linear_attribution",
-    bench=True,
     tags=("joins", "analytics"),
     oracle="""
 WITH e AS (
@@ -384,7 +373,6 @@ def fn06_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn07_rfm_segments",
-    bench=True,
     tags=("joins", "analytics"),
     oracle="""
 WITH p AS (

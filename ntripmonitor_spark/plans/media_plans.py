@@ -106,7 +106,6 @@ def _fixture_dir() -> str:
 
 @register(
     "mm12_media_manifest",
-    bench=True,
     tags=("multimodal", "source"),
     oracle=f"""
 SELECT CAST(doc_id AS INT) AS doc_id,
@@ -210,7 +209,6 @@ def _scene_fixture_dir() -> str:
 
 @register(
     "mm14_scene_change",
-    bench=True,
     tags=("multimodal",),
     oracle=f"""
 WITH valid AS (

@@ -23,8 +23,6 @@ from ntripmonitor_spark.functions.portable import (
     BENFORD_L10,
     first_digit_sql,
     idiv_sql,
-    int_to_dec,
-    int_to_dec_sql,
     quantize,
     quantize_sql,
     rational_rh,
@@ -66,7 +64,6 @@ def dd01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dd02_ngram_jaccard",
-    bench=True,
     tags=("dedup",),
     oracle=f"""
 WITH {_SH_CTE},
@@ -238,7 +235,6 @@ def dd05_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ss01_knn_bruteforce",
-    bench=True,
     tags=("simsearch",),
     oracle=f"""
 WITH {_VEC_CTE},
@@ -339,7 +335,6 @@ def tx01_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx02_quality_score",
-    bench=True,
     tags=("text",),
     oracle="""
 WITH w AS (
@@ -675,7 +670,6 @@ def dd06_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cu03_full_pipeline",
     tags=("sampling", "text", "dedup"),
-    bench=True,
     oracle="""
 WITH w AS (
     SELECT doc_id, text, source,
@@ -765,7 +759,6 @@ def cu03_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "gr01_cluster_sizes",
     tags=("dedup",),
-    bench=True,
     oracle=f"""
 WITH RECURSIVE {_SH_CTE},
 sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
@@ -826,7 +819,6 @@ def gr01_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "gr03_lsh_clusters",
     tags=("dedup",),
-    bench=True,
     oracle=f"""
 WITH RECURSIVE {_SH_CTE},
 mh AS (
@@ -1061,7 +1053,6 @@ def tx07_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cu01_curation_funnel",
-    bench=True,
     tags=("sampling", "text"),
     oracle="""
 WITH w AS (
@@ -1218,7 +1209,6 @@ def sk01_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cm01_countmin_heavy_hitters",
     tags=("sketch",),
-    bench=True,
     oracle="""
 WITH c AS (
     SELECT t.d,
@@ -1261,7 +1251,6 @@ def cm01_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dc01_decontamination",
-    bench=True,
     tags=("dedup", "text"),
     oracle=f"""
 WITH {_SH_CTE},
@@ -1330,7 +1319,6 @@ _PQ_SUB = 8  # subspaces; 64-dim vectors → 8-dim sub-vectors
 @register(
     "ss05_pq_encode",
     tags=("simsearch",),
-    bench=True,
     oracle=f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
 seeds AS (SELECT vec_id AS cid, vec AS sv FROM v WHERE vec_id < 4),
@@ -1368,7 +1356,6 @@ def ss05_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ss09_pq_adc_topk",
     tags=("simsearch",),
-    bench=True,
     oracle=f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
 seeds AS (SELECT vec_id AS cid, vec AS sv FROM v WHERE vec_id < 4),
@@ -1424,7 +1411,6 @@ def ss09_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ss06_ivf_probe",
     tags=("simsearch",),
-    bench=True,
     oracle=f"""
 WITH {_VEC_CTE},
 seeds AS (SELECT vec_id AS cid, vec AS sv FROM v WHERE vec_id < 8),
@@ -1482,7 +1468,6 @@ def ss06_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "qa01_quantile_thresholds",
     tags=("stats", "curation"),
-    bench=True,
     oracle="""
 SELECT source,
        count(*) AS n_docs,
@@ -1615,7 +1600,6 @@ def lr02_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "tx10_bigram_nll",
     tags=("text",),
-    bench=True,
     oracle="""
 WITH w AS (
     SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
@@ -1788,7 +1772,6 @@ def bp01_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sp04_stratified_ksample",
     tags=("sampling",),
-    bench=True,
     oracle="""
 WITH s AS (
     SELECT source, doc_id, (doc_id * 2654435761) % 4294967296 AS coin FROM documents
@@ -1821,7 +1804,6 @@ def sp04_stratified_ksample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "hs01_length_histogram",
     tags=("stats",),
-    bench=True,
     oracle="""
 WITH h AS (
     SELECT lang, CAST(floor(n_chars / 250) AS BIGINT) AS bin,
@@ -1853,7 +1835,6 @@ def hs01_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "tx09_zipf_fit",
     tags=("text", "stats"),
-    bench=True,
     oracle="""
 WITH t AS (
     SELECT unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS tok
@@ -1891,7 +1872,6 @@ def tx09_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ig01_dsir_weights",
     tags=("sampling", "text"),
-    bench=True,
     oracle="""
 WITH w AS (
     SELECT doc_id, lang = 'en' AS is_t,
@@ -1943,7 +1923,6 @@ def ig01_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sd01_duplicate_spans",
     tags=("dedup",),
-    bench=True,
     oracle="""
 WITH d AS (
     SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
@@ -1996,7 +1975,6 @@ def sd01_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lr01_grouped_regression",
     tags=("stats",),
-    bench=True,
     oracle="""
 SELECT l_returnflag,
        regr_count(l_extendedprice, l_quantity) AS n,
@@ -2029,7 +2007,6 @@ def lr01_grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dc02_decontamination_bloom",
-    bench=True,
     tags=("dedup", "text"),
     oracle=f"""
 WITH {_SH_CTE},
@@ -2060,7 +2037,6 @@ def dc02_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cu02_adaptive_gate",
-    bench=True,
     tags=("curation", "stats"),
     oracle="""
 WITH t AS (
@@ -2096,7 +2072,6 @@ def cu02_adaptive_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tp03_split_long_docs",
-    bench=True,
     tags=("packing",),
     oracle="""
 WITH staged AS (
@@ -2239,7 +2214,6 @@ def lo01_zorder_code(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx08_bpe_pairs",
-    bench=True,
     tags=("text",),
     oracle="""
 WITH t AS (
@@ -2284,7 +2258,6 @@ cells AS (
 
 @register(
     "dd07_semantic_dedup",
-    bench=True,
     tags=("dedup", "simsearch"),
     oracle=f"""
 WITH {_VEC_CTE},
@@ -2382,7 +2355,6 @@ _GOPHER_SW = "['the', 'a', 'of', 'and', 'is', 'to', 'in']"
 
 @register(
     "tx11_gopher_rules",
-    bench=True,
     tags=("text",),
     oracle=f"""
 WITH w AS (
@@ -2432,7 +2404,6 @@ def tx11_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx12_pmi_collocations",
-    bench=True,
     tags=("text",),
     oracle="""
 WITH w AS (
@@ -2512,7 +2483,6 @@ _SQ_MAXS = ", ".join(f"max(vec[{i + 1}])" for i in range(_SQ_DIM))
 
 @register(
     "ss10_sq8_quantize",
-    bench=True,
     tags=("simsearch",),
     oracle=f"""
 WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
@@ -2610,7 +2580,6 @@ def tk01_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ss11_ivfpq_search",
-    bench=True,
     tags=("simsearch",),
     oracle=f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
@@ -2697,7 +2666,6 @@ def ss11_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dd09_block_dedup_rebuild",
-    bench=True,
     tags=("dedup",),
     oracle="""
 WITH w AS (
@@ -2746,7 +2714,6 @@ def dd09_block_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "er01_name_matching",
-    bench=True,
     tags=("dedup", "linkage"),
     oracle="""
 WITH s AS (
@@ -2780,7 +2747,6 @@ def er01_name_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx13_tfidf_keywords",
-    bench=True,
     tags=("text",),
     oracle="""
 WITH toks AS (
@@ -2815,7 +2781,6 @@ def tx13_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ks01_source_drift",
-    bench=True,
     tags=("stats", "monitoring"),
     oracle="""
 WITH counts AS (
@@ -2861,7 +2826,6 @@ def ks01_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "kl01_source_divergence",
-    bench=True,
     tags=("text", "monitoring"),
     oracle="""
 WITH toks AS (
@@ -2919,7 +2883,6 @@ def kl01_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dd10_containment",
-    bench=True,
     tags=("dedup",),
     oracle=f"""
 WITH {_SH_CTE},
@@ -2961,7 +2924,6 @@ def dd10_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "qa02_percentile_normalize",
-    bench=True,
     tags=("stats",),
     oracle="""
 SELECT doc_id, source, n_chars,
@@ -2988,7 +2950,6 @@ def qa02_percentile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "er02_entity_clusters",
-    bench=True,
     tags=("dedup", "linkage"),
     oracle="""
 WITH RECURSIVE s AS (
@@ -3029,7 +2990,6 @@ def er02_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp01_mean_drift",
-    bench=True,
     tags=("stats", "monitoring"),
     oracle="""
 WITH per AS (
@@ -3072,7 +3032,6 @@ def dp01_mean_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ss12_mips_topk",
-    bench=True,
     tags=("simsearch",),
     oracle=f"""
 WITH {_VEC_CTE},
@@ -3108,7 +3067,6 @@ def ss12_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm06_phash_neardup",
-    bench=True,
     tags=("multimodal", "dedup"),
     oracle=f"""
 WITH {_BYTES_CTE},
@@ -3161,7 +3119,6 @@ def mm06_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm11_phash_16bit",
-    bench=True,
     tags=("multimodal", "dedup"),
     oracle=f"""
 WITH {_BYTES_CTE},
@@ -3213,7 +3170,6 @@ def mm11_phash_16bit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm13_phash_planted",
-    bench=True,
     tags=("multimodal", "dedup"),
     oracle="""
 WITH aug AS (
@@ -3302,7 +3258,6 @@ def mm13_phash_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sp06_token_budget",
-    bench=True,
     tags=("sampling", "curation"),
     oracle="""
 WITH d AS (
@@ -3343,7 +3298,6 @@ def sp06_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ws01_weighted_sample",
-    bench=True,
     tags=("sampling",),
     doc="Exact-k weighted sample without replacement (A-ES priorities).",
     oracle="""
@@ -3373,7 +3327,6 @@ def ws01_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq01_table_profile",
-    bench=True,
     tags=("quality",),
     doc="One-pass per-column profile of the events table.",
     oracle="""
@@ -3430,7 +3383,6 @@ def dq01_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq02_profile_approx",
-    bench=True,
     tags=("quality",),
     doc="HLL (no-Expand) per-column profile of the events table.",
     oracle="""
@@ -3514,7 +3466,6 @@ _MH_BIT_AGREE = " + ".join(
 
 @register(
     "dd11_bbit_minhash",
-    bench=True,
     tags=("dedup",),
     doc="Jaccard estimation from 1-bit minhash signatures (Li-Koenig).",
     oracle=f"""
@@ -3609,7 +3560,6 @@ _SB_MAP = "CASE WHEN {c} IN (SELECT tok FROM v) THEN {c} ELSE '<unk>' END"
 
 @register(
     "tx14_stupid_backoff",
-    bench=True,
     tags=("text",),
     doc="Trigram stupid-backoff NLL, model fit on even docs, scoring all.",
     oracle=f"""
@@ -3692,7 +3642,6 @@ def tx14_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cu04_drop_reasons",
-    bench=True,
     tags=("sampling", "text"),
     doc="Per-document first-drop-stage audit of the curation funnel.",
     oracle="""
@@ -3747,7 +3696,6 @@ def cu04_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sk02_kmv_set_algebra",
-    bench=True,
     tags=("sketch",),
     doc="Pairwise distinct union/intersection estimates from KMV sketches.",
     oracle="""
@@ -3822,7 +3770,6 @@ def sk02_kmv_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "er03_blocking_profile",
-    bench=True,
     tags=("dedup", "linkage"),
     doc="Candidate-volume / skew / reduction-ratio report for er01's blocking.",
     oracle="""
@@ -3859,7 +3806,6 @@ def er03_blocking_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tp04_pack_utilization",
-    bench=True,
     tags=("sampling",),
     doc="Per-source fill-fraction report over tp01's greedy packing.",
     oracle="""
@@ -3907,7 +3853,6 @@ def tp04_pack_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gr02_dup_degree",
-    bench=True,
     tags=("dedup",),
     doc="Degree distribution of the MinHash-LSH near-dup graph.",
     oracle=f"""
@@ -3959,7 +3904,6 @@ def gr02_dup_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "qa03_robust_outliers",
-    bench=True,
     tags=("quality",),
     doc="Per-source median/MAD modified-z outlier screen on doc length.",
     oracle="""
@@ -4005,7 +3949,6 @@ def qa03_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm09_modality_census",
-    bench=True,
     tags=("multimodal",),
     doc="Magic-byte sniffed modality census over a mixed binary drop.",
     oracle="""
@@ -4048,7 +3991,6 @@ def mm09_modality_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ig02_loss_aware_mix",
-    bench=True,
     tags=("sampling", "text"),
     doc="Exponential source reweighting by mean LM-surprisal excess.",
     oracle="""
@@ -4114,7 +4056,6 @@ def ig02_loss_aware_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx15_novelty_score",
-    bench=True,
     tags=("text", "dedup"),
     doc="Fraction of each doc's 3-gram shingles unique to it.",
     oracle=f"""
@@ -4141,7 +4082,6 @@ def tx15_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sp07_epoch_order",
-    bench=True,
     tags=("sampling",),
     doc="Reproducible epoch-2 training order (sharded hash permutation).",
     oracle="""
@@ -4175,7 +4115,6 @@ def sp07_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cu05_ccnet_buckets",
-    bench=True,
     tags=("sampling", "text"),
     doc="Perplexity head/middle/tail bucketing with kept-rate policy.",
     oracle="""
@@ -4253,7 +4192,6 @@ def cu05_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dc03_thirteen_gram",
-    bench=True,
     tags=("dedup", "text"),
     doc="Flag corpus docs sharing ANY 13-gram with the benchmark slice.",
     oracle="""
@@ -4302,7 +4240,6 @@ def dc03_thirteen_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "er04_blocking_compare",
-    bench=True,
     tags=("dedup", "linkage"),
     doc="Three candidate blocking keys profiled side by side.",
     oracle="""
@@ -4380,7 +4317,6 @@ _DD08_SPLIT = 250  # doc_id < SPLIT = already-signed corpus; rest = new batch
 
 @register(
     "dd08_lsh_delta",
-    bench=True,
     tags=("dedup",),
     doc="Delta-batch MinHash-LSH against the persisted signature table.",
     oracle=f"""
@@ -4432,7 +4368,6 @@ def dd08_lsh_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm10_byte_entropy",
-    bench=True,
     tags=("multimodal", "quality"),
     doc="Shannon byte entropy per binary payload.",
     oracle=f"""
@@ -4471,7 +4406,6 @@ _LID_PRED = """CASE WHEN s_en = best THEN 'en'
 
 @register(
     "tx16_langid_confusion",
-    bench=True,
     tags=("text", "quality"),
     doc="Confusion matrix + per-class recall for the tx01 classifier.",
     oracle=f"""
@@ -4529,7 +4463,6 @@ def tx16_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ss13_sq8_recall",
-    bench=True,
     tags=("simsearch",),
     doc="Recall@5 of cosine search over SQ8-reconstructed vectors vs exact.",
     oracle=f"""
@@ -4825,7 +4758,6 @@ def fn04_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ss14_mmr_rerank",
-    bench=True,
     tags=("simsearch", "retrieval"),
     oracle=f"""
 WITH {_VEC_CTE},
@@ -4908,7 +4840,6 @@ def ss14_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sp10_pps_resample",
-    bench=True,
     tags=("sampling", "stats"),
     oracle=f"""
 WITH mx AS (SELECT max(n_chars) AS mx FROM documents),
@@ -4976,7 +4907,6 @@ pr{i} AS (
 
 @register(
     "gr04_pagerank",
-    bench=True,
     tags=("dedup", "graph"),
     oracle=f"""
 WITH {_SH_CTE},
@@ -5079,8 +5009,7 @@ def mx02_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     flattening normalizer is an exact BIGINT sum of those, and
     weight_ppm / epochs_e4 are exact integer-rational round-half-up
     divisions in pure BIGINT arithmetic (functions/portable.rational_rh
-    — no round(), no DECIMAL, no double ratio on either engine). If
-    this query reds a fourth time, the pb06/pb07 probes attribute it."""
+    — no round(), no DECIMAL, no double ratio on either engine)."""
     docs = table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(
         F.sum("n_chars").alias("n_chars_total"),
@@ -5217,8 +5146,7 @@ def dq03_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row_share_ppm = rh(n_rows*10^6, total), skew_vs_mean_e4 =
     rh(n_rows*32*10^4, total); functions/portable.rational_rh — no
     double is constructed anywhere, eliminating the entire fp
-    hypothesis space on this query's third driver-red row; the pb01-03
-    probe family carries the attribution if it reds again)."""
+    hypothesis space on this query's third driver-red row)."""
     ev = table(spark, sf_dir, "events")
     per_key = ev.groupBy(
         "user_id",
@@ -5694,9 +5622,7 @@ def qa04_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QA05_BINS = 128
 _QA05_W = f"((vmax - vmin) / {float(_QA05_BINS)!r})"
 
-# shared base CTEs (e0/ext/v/h/c/r) — also the spine of the round-10
-# probe decomposition (plans/probes.py: pb10/pb11/pb12), so the probes'
-# SQL is textually identical to qa05's
+# shared base CTEs (e0/ext/v/h/c/r) of the qa05 oracle
 QA05_BASE_CTES = f"""
 e0 AS (SELECT event_type, value FROM events WHERE value IS NOT NULL),
 ext AS (SELECT min(CAST(value AS DOUBLE)) AS vmin, max(CAST(value AS DOUBLE)) AS vmax FROM e0),
@@ -5724,7 +5650,7 @@ r AS (
 
 def qa05_est_ppm_sql(q: float) -> str:
     """The histogram-interpolation expression + target predicate pair
-    for one quantile over CTE ``c`` — shared with plans/probes.py."""
+    for one quantile over CTE ``c``."""
     target = f"{q!r} * CAST(n_total AS DOUBLE)"
     est = (
         f"CASE WHEN vmax = vmin THEN vmin ELSE "
@@ -5744,7 +5670,7 @@ p{p} AS (
 
 def qa05_exact_ppm_sql(q: float) -> str:
     """The exact rank-interpolation CTE triplet for one quantile over
-    CTE ``r`` — shared with plans/probes.py."""
+    CTE ``r``."""
     p = int(q * 100)
     k = f"CAST(floor({q!r} * CAST(n_g - 1 AS DOUBLE)) AS BIGINT)"
     frac = f"({q!r} * CAST(n_g - 1 AS DOUBLE) - CAST({k} AS DOUBLE))"
@@ -5859,47 +5785,6 @@ def dq04_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ntripmonitor_spark.operators import stats
 
     return stats.benford_deviation(table(spark, sf_dir, "events"))
-
-
-# ---------------------------------------------------------------------------
-# dq08 — DELIBERATE DECIMAL-output canary (diagnostic probe, round 9)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "dq08_decimal_canary",
-    tags=("quality", "canary"),
-    oracle=f"""
-SELECT n_regionkey,
-       count(*) AS n_nations,
-       {int_to_dec_sql('count(*) * 250000', 6)} AS n_quarter_dec,
-       CAST(count(*) AS DOUBLE) * 0.25 AS n_quarter_dbl
-FROM nation GROUP BY 1
-""",
-)
-def dq08_decimal_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELIBERATE falsifiability probe for the DECIMAL-output-class
-    hypothesis — NOT a production operator. Rounds 7–8 showed every
-    final-DECIMAL-emitting query hash-red under the driver while every
-    integer-emitting one was green (gr04's red→green flip after going
-    all-BIGINT was the controlled case); round 9 therefore converted
-    all remaining DECIMAL outputs to quantized-BIGINT integer units.
-    This 5-row query keeps ONE DECIMAL(18,6) column alive (the exact
-    int_to_dec recipe that went red) next to a BIGINT control and an
-    exactly-representable DOUBLE control, all trivially equal across
-    engines. Interpretation of its driver row: hash-red ⇒ the DECIMAL
-    canonicalization hypothesis is confirmed and the recipe stays
-    banned; hash-green ⇒ the hypothesis is wrong and the r7/r8 reds
-    need a different explanation. Either outcome is information; the
-    row is expected red and is documented as such in docs/COVERAGE.md.
-    """
-    nation = table(spark, sf_dir, "nation")
-    g = nation.groupBy("n_regionkey").agg(F.count(F.lit(1)).alias("n_nations"))
-    return g.select(
-        "n_regionkey", "n_nations",
-        int_to_dec(F.col("n_nations") * F.lit(250000), 6).alias("n_quarter_dec"),
-        (F.col("n_nations").cast("double") * F.lit(0.25)).alias("n_quarter_dbl"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -8075,7 +7960,7 @@ def qa08_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # report). Unpersisted, each rescans the corpus — measured 2.5x at
     # 10x data (SCALE.md §6u, round-11 verdict #3). Persist it via the
     # shared qa-family memo so the scan runs once per input, and
-    # back-to-back qa08 calls (bench trials, probe legs) reuse it.
+    # back-to-back qa08 calls reuse it.
     from ntripmonitor_spark.operators.stats import _hq_memoized
 
     d = _hq_memoized("qa08_d", docs, (), _build_d)

@@ -16,7 +16,6 @@ class Query:
     fn: QueryFn
     oracle: str | None
     doc: str = ""
-    bench: bool = False
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
@@ -27,17 +26,13 @@ def register(
     name: str,
     oracle: str | None = None,
     doc: str = "",
-    bench: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), bench=bench, tags=tags)
+        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags)
         return fn
 
     return deco
 
-
-def bench_queries() -> dict[str, Query]:
-    return {n: q for n, q in REGISTRY.items() if q.bench}

@@ -42,7 +42,6 @@ def _dsum(col, scale: int = 2):
 # ---------------------------------------------------------------------------
 @register(
     "q01_pricing_summary",
-    bench=True,
     tags=("Q2", "Q17"),
     oracle="""
 SELECT l_returnflag, l_linestatus,
@@ -86,7 +85,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q02_tumbling_window",
-    bench=True,
     tags=("Q1", "Q2"),
     oracle="""
 SELECT time_bucket(INTERVAL '5 minutes', ts) AS bucket,
@@ -182,7 +180,6 @@ def q04_pivot_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q05_rate_normalization",
-    bench=True,
     tags=("Q1", "Q5"),
     oracle="""
 SELECT time_bucket(INTERVAL '10 minutes', ts) AS bucket,
@@ -248,7 +245,6 @@ def q06_agg_of_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q07_dim_join",
-    bench=True,
     tags=("Q6", "Q2"),
     oracle="""
 SELECT c.c_mktsegment,
@@ -315,7 +311,6 @@ def q08_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q09_three_way_join",
-    bench=True,
     tags=("Q8", "Q9"),
     oracle="""
 SELECT c.c_mktsegment,
@@ -713,7 +708,6 @@ def q20_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q21_rollup_hierarchy",
-    bench=True,
     tags=("extension",),
     oracle="""
 SELECT event_type,
@@ -763,7 +757,6 @@ def q21_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q22_no_order_customers",
-    bench=True,
     tags=("relational",),
     oracle="""
 WITH pos AS (
@@ -810,7 +803,6 @@ def q22_no_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q23_value_deciles",
-    bench=True,
     tags=("relational",),
     doc="Per-type decile buckets of event value (ntile window + rollup).",
     oracle="""
@@ -848,7 +840,6 @@ def q23_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q24_intersect_users",
-    bench=True,
     tags=("relational",),
     doc="Set-op surface: users appearing in BOTH error and purchase events.",
     oracle="""
@@ -872,7 +863,6 @@ def q24_intersect_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q25_except_users",
-    bench=True,
     tags=("relational",),
     doc="Set-op surface: users with views but no purchases (EXCEPT).",
     oracle="""

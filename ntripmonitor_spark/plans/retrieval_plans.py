@@ -34,7 +34,6 @@ _TOKS_CTE = (
 
 @register(
     "in01_inverted_index",
-    bench=True,
     tags=("retrieval",),
     oracle=f"""
 WITH {_TOKS_CTE},
@@ -59,7 +58,6 @@ def in01_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bm01_bm25_topk",
-    bench=True,
     tags=("retrieval",),
     oracle=f"""
 WITH {_TOKS_CTE},
@@ -103,7 +101,6 @@ def bm01_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rc01_hybrid_rrf",
-    bench=True,
     tags=("retrieval", "simsearch"),
     oracle=f"""
 WITH {_TOKS_CTE},
@@ -179,7 +176,6 @@ def rc01_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "in02_phrase_search",
-    bench=True,
     tags=("retrieval",),
     doc="Exact phrase search via positional-posting self-joins.",
     oracle="""
@@ -236,7 +232,6 @@ def _posting_index_path(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "in03_phrase_probe",
-    bench=True,
     tags=("retrieval",),
     doc="Probe-only phrase search over the materialized posting index.",
     oracle="""
@@ -273,7 +268,6 @@ def in03_phrase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "in04_boolean_probe",
-    bench=True,
     tags=("retrieval",),
     doc="Probe-only AND/AND-NOT boolean retrieval over the posting index.",
     oracle="""

@@ -197,7 +197,6 @@ t AS (
 
 @register(
     "rt01_packages",
-    bench=True,
     tags=("rtcm",),
     oracle=f"""
 WITH {_EV_CTE}
@@ -277,7 +276,6 @@ FROM f
 
 @register(
     "rt02_observations",
-    bench=True,
     tags=("rtcm",),
     oracle=_RT02_ORACLE,
 )
@@ -311,7 +309,6 @@ def _frame_archive_path(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "rt09_decode_throughput",
-    bench=True,
     tags=("rtcm",),
     oracle=_RT02_ORACLE,
 )

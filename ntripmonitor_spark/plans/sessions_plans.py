@@ -13,7 +13,6 @@ from ntripmonitor_spark.tables import table
 
 @register(
     "sn01_user_sessions",
-    bench=True,
     tags=("sessions",),
     oracle="""
 WITH e AS (
@@ -68,7 +67,6 @@ def sn02_reconnect_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sn03_native_sessions",
-    bench=True,
     tags=("sessions",),
     doc="Gap sessions via Spark's native session_window aggregate.",
     oracle="""

@@ -19,7 +19,6 @@ from ntripmonitor_spark.tables import table
 
 @register(
     "sj01_salted_distinct",
-    bench=True,
     tags=("skew",),
     doc="Skew-safe exact distinct users per event type (salted two-phase).",
     oracle="""
@@ -41,7 +40,6 @@ def sj01_salted_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sj02_salted_join",
-    bench=True,
     tags=("skew",),
     doc="Skewed fact-to-stats join via deterministic salting.",
     oracle="""

@@ -15,7 +15,6 @@ from ntripmonitor_spark.tables import table
 
 @register(
     "an01_rolling_zscore",
-    bench=True,
     tags=("timeseries",),
     oracle="""
 WITH r AS (
@@ -42,7 +41,6 @@ def an01_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts01_gap_fill",
-    bench=True,
     tags=("timeseries",),
     oracle="""
 WITH b AS (
@@ -83,7 +81,6 @@ def ts01_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "an02_seasonal_anomalies",
-    bench=True,
     tags=("timeseries",),
     oracle="""
 WITH b AS (
@@ -109,7 +106,6 @@ def an02_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mk01_event_transitions",
-    bench=True,
     tags=("timeseries",),
     oracle="""
 WITH s AS (
@@ -139,7 +135,6 @@ def mk01_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "an03_mean_shift",
-    bench=True,
     tags=("timeseries",),
     oracle="""
 WITH s AS (
@@ -175,7 +170,6 @@ def an03_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "an04_ewma_drift",
-    bench=True,
     tags=("timeseries",),
     doc="Per-type EWMA control line over daily means (closed-form window).",
     oracle="""
@@ -209,7 +203,6 @@ def an04_ewma_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts02_ohlc_downsample",
-    bench=True,
     tags=("timeseries",),
     doc="Per-type hourly OHLC render-side downsampling.",
     oracle="""
@@ -241,7 +234,6 @@ def ts02_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "an05_seasonal_decompose",
-    bench=True,
     tags=("timeseries",),
     doc="Additive trend/weekday-seasonal/residual decomposition per type.",
     oracle="""
@@ -286,7 +278,6 @@ def an05_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts03_twap_locf",
-    bench=True,
     tags=("timeseries",),
     oracle="""
 WITH e AS (

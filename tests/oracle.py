@@ -160,18 +160,17 @@ def compare_query(
         # identically when magnitudes are small — round-11 ADVICE. The
         # DESCRIBE types don't depend on the data, so this closes the
         # class for every compare, not just the static lint sweep.
-        if name != "dq08_decimal_canary":
-            banned = [
-                (c, t) for c, t, *_ in declared
-                if any(b in t.upper() for b in ("HUGEINT", "DECIMAL"))
-            ]
-            if banned:
-                return False, (
-                    f"{name}: oracle declares banned output type(s) "
-                    f"{banned} — uncast HUGEINT/DECIMAL renders as "
-                    "float64/object on the driver's pandas path "
-                    "(VERDICT r10)"
-                )
+        banned = [
+            (c, t) for c, t, *_ in declared
+            if any(b in t.upper() for b in ("HUGEINT", "DECIMAL"))
+        ]
+        if banned:
+            return False, (
+                f"{name}: oracle declares banned output type(s) "
+                f"{banned} — uncast HUGEINT/DECIMAL renders as "
+                "float64/object on the driver's pandas path "
+                "(VERDICT r10)"
+            )
         for c in d_cols:
             base = s_types.get(c, "").split("(")[0]
             if base in _SPARK_INTEGRAL and pdf[c].dtype.kind not in "iub":

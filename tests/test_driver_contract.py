@@ -1,7 +1,6 @@
-"""The driver-facing surface is a CONTRACT: __spark_entry__ exposes
-entry()/queries()/oracle_sql() with exact shapes, and bench.py prints
-one JSON line with fixed keys. These tests pin that surface so a
-refactor cannot silently break what the harness consumes."""
+"""The library surface is a CONTRACT: __spark_entry__ exposes
+entry()/queries()/oracle_sql() with exact shapes. These tests pin that
+surface so a refactor cannot silently break what callers consume."""
 
 from __future__ import annotations
 
@@ -34,59 +33,6 @@ def test_queries_and_oracles_contract(spark):
     # callables take (spark, sf_dir) and return a DataFrame lazily
     df = qs[min(qs)](spark, "/root/testdata/sf0.001")
     assert df.columns
-
-
-def test_bench_emits_one_json_line():
-    """bench.py at sf0.001 with a clipped set: exit 0, exactly one
-    stdout line, parseable JSON with the driver's keys."""
-    import json
-    import os
-    import subprocess
-
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-               SPARK_GRAFT_BENCH_ONLY="q01_pricing_summary,sn01_user_sessions,ws01_weighted_sample")
-    out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
-        capture_output=True, text=True, timeout=900, env=env, cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    lines = [line for line in out.stdout.splitlines() if line.strip()]
-    assert len(lines) == 1, f"expected one JSON line, got {len(lines)}"
-    d = json.loads(lines[0])
-    assert {"metric", "value", "unit", "queries", "excluded", "sf"} <= set(d)
-    assert d["unit"] == "sec" and d["value"] > 0
-    assert d["excluded"] == []
-    assert abs(d["value"] - round(sum(d["queries"].values()), 2)) < 0.011
-    # the archived line reports the headline subset (q01 is the only
-    # headline query in this dev set); the full record carries the rest
-    assert set(d["queries"]) == {"q01_pricing_summary"}
-    full = json.load(open("/root/repo/BENCH_FULL_DEV.json"))
-    assert set(full["queries"]) == {
-        "q01_pricing_summary", "sn01_user_sessions", "ws01_weighted_sample"
-    }
-    assert full["excluded"] == {}
-
-
-def test_bench_headline_line_fits_tail_capture():
-    """The driver archives only a ~2 kB output tail (BENCH_r04 was
-    truncated to unparseability). The headline line must stay well
-    under that even with worst-case float widths."""
-    import json
-
-    from bench import HEADLINE
-
-    worst = {
-        "metric": "query_set_wall_clock",
-        "value": 99999.99,
-        "unit": "sec",
-        "queries": {n: 99999.99 for n in HEADLINE},
-        "excluded": [],
-        "sf": 0.1,
-        "full_value": 99999.9999,
-        "n_full": 999,
-    }
-    assert len(json.dumps(worst)) < 1200
-    assert len(HEADLINE) == 14
 
 
 def test_queries_survive_non_utc_driver_session():

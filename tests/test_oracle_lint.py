@@ -14,7 +14,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
 
-from oracle_type_lint import BANNED, EXEMPT, lint_oracles  # noqa: E402
+from oracle_type_lint import BANNED, lint_oracles  # noqa: E402
 
 from tests.oracle import duck_connection  # noqa: E402
 
@@ -42,10 +42,6 @@ def test_lint_rejects_uncast_integer_sum(sf_dir):
     con.close()
     assert any(b in rows[0][1].upper() for b in BANNED), rows
     assert any(b in win[0][1].upper() for b in BANNED), win
-
-
-def test_canary_is_the_only_exemption():
-    assert EXEMPT == frozenset({"dq08_decimal_canary"})
 
 
 def test_pandas_leg_catches_uncast_sum(spark, sf_dir):

@@ -11,34 +11,26 @@ from ntripmonitor_spark.plans import REGISTRY
 from tests.oracle import compare_query
 
 ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle)
-# The deliberate DECIMAL probe; every other query emits no DECIMAL(p,s)
-# output column (DECIMAL as an internal exact-sum carrier is fine).
-DECIMAL_CANARY = "dq08_decimal_canary"
 
 
-def decimal_outputs(name, df):
-    if name == DECIMAL_CANARY:
-        return []
+def decimal_outputs(df):
+    """No registered query emits a DECIMAL(p,s) output column
+    (DECIMAL as an internal exact-sum carrier is fine)."""
     return [f.name for f in df.schema.fields if isinstance(f.dataType, DecimalType)]
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_parity(spark, sf_dir, name):
     q = REGISTRY[name]
-    # dq08_decimal_canary is the deliberate DECIMAL probe: its whole
-    # point is to fail the driver's pandas path, so only the fetchall
-    # leg applies (tools/oracle_type_lint.py exempts it the same way).
-    faithful = name != DECIMAL_CANARY
     built = []
 
     def fn(spark, sf_dir):
         built.append(q.fn(spark, sf_dir))
         return built[-1]
 
-    ok, msg = compare_query(spark, sf_dir, name, fn, q.oracle,
-                            driver_faithful=faithful)
+    ok, msg = compare_query(spark, sf_dir, name, fn, q.oracle)
     assert ok, msg
-    assert not decimal_outputs(name, built[0]), f"{name}: DECIMAL output columns"
+    assert not decimal_outputs(built[0]), f"{name}: DECIMAL output columns"
 
 
 def test_rows_only_queries_run(spark, sf_dir):
@@ -47,5 +39,5 @@ def test_rows_only_queries_run(spark, sf_dir):
         if q.oracle is None:
             df = q.fn(spark, sf_dir)
             assert df.columns, f"{name}: empty schema"
-            assert not decimal_outputs(name, df), f"{name}: DECIMAL output columns"
+            assert not decimal_outputs(df), f"{name}: DECIMAL output columns"
             df.limit(5).collect()

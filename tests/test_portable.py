@@ -19,7 +19,7 @@ from decimal import Decimal
 
 import duckdb
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -66,13 +66,28 @@ def test_dec_fixed_spark_equals_duckdb(spark, xs, scale):
     assert srows == drows
 
 
+# the pinned cases, on both engines: scale-0 ties (2.5 -> 3, -2.5 -> -2),
+# a value whose x*10^6 lands next to the half boundary, and the
+# tx19/sp10 magnitudes
+_QUANTIZE_PINNED = [0.1, 2.5, -2.5, 1.0 / 3.0, 5e-07, 58407.4999999, 1000.0]
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.lists(finite_doubles, min_size=1, max_size=8), st.sampled_from([3, 6]))
+@example(xs=_QUANTIZE_PINNED, scale=0)
+@example(xs=_QUANTIZE_PINNED, scale=6)
 def test_quantize_is_floor_half_up(spark, xs, scale):
     sdf = spark.createDataFrame([(x,) for x in xs], "x double")
     got = [r[0] for r in sdf.select(quantize(F.col("x"), scale)).collect()]
     want = [math.floor(x * float(10 ** scale) + 0.5) for x in xs]
     assert got == want
+    con = duckdb.connect()
+    duck = [
+        con.execute(f"SELECT {quantize_sql('CAST(? AS DOUBLE)', scale)}", [x]).fetchone()[0]
+        for x in xs
+    ]
+    con.close()
+    assert duck == want
 
 
 @settings(max_examples=30, deadline=None)

@@ -1,7 +1,7 @@
-"""Round-10 additions: the probe matrix (plans/probes.py), the exact
-integer-rational emission, and the two new operators (sp13 weighted
-reservoir, mx03 epoch schedule). Every registered query is also
-oracle-parity-checked by tests/test_parity.py."""
+"""Round-10 additions: the exact integer-rational emission, the
+stages it runs through (dq03, qa05, sp10, tx19), and the two new
+operators (sp13 weighted reservoir, mx03 epoch schedule). Every
+registered query is also oracle-parity-checked by tests/test_parity.py."""
 
 from __future__ import annotations
 
@@ -267,110 +267,83 @@ def test_ts07_partitioning_invariance(spark):
 
 
 # ---------------------------------------------------------------------------
-# probe matrix — structural guarantees
+# canonical stages — each per-row or per-leg stage agrees with its rollup
 # ---------------------------------------------------------------------------
 
 
-def test_twin_probes_are_byte_identical():
-    """pb15/pb16 must forward to the SAME callable and carry the SAME
-    oracle string as their canonicals — anything less and a red/green
-    split stops meaning 'name-keyed driver state'."""
+def test_dq03_and_qa05_match_their_stages(spark):
+    """dq03's count columns are the Knuth-hash partition rollup of the
+    per-user event counts, and row_share_ppm is the exact round-half-up
+    of n_rows * 10^6 / total over those counts. qa05's est_* and
+    exact_* columns are exactly the standalone histogram-interpolation
+    and rank-interpolation legs it composes."""
+    from ntripmonitor_spark.operators.stats import (
+        hq_cum, hq_est_leg, hq_exact_leg, hq_ranked,
+    )
     from ntripmonitor_spark.plans import REGISTRY
+    from ntripmonitor_spark.tables import table
 
-    for canon, twin in [
-        ("dq03_key_skew_profile", "pb15_dq03_twin"),
-        ("sp12_systematic", "pb16_sp12_twin"),
-    ]:
-        assert REGISTRY[twin].oracle == REGISTRY[canon].oracle
-
-
-def test_twin_probe_results_match_canonical(spark):
-    """The twin's result set is cell-identical to the canonical's."""
-    from ntripmonitor_spark.plans import REGISTRY
-
-    for canon, twin in [
-        ("dq03_key_skew_profile", "pb15_dq03_twin"),
-        ("sp12_systematic", "pb16_sp12_twin"),
-    ]:
-        a = sorted(map(tuple, REGISTRY[canon].fn(spark, SF).collect()))
-        b = sorted(map(tuple, REGISTRY[twin].fn(spark, SF).collect()))
-        assert a == b, f"{twin} diverged from {canon}"
-
-
-def test_pb08_constant_probe_ground_truth(spark):
-    """The no-table probe's values against hand-computed ground truth —
-    if this ever moves, the quantize/rational_rh constructs moved."""
-    from ntripmonitor_spark.plans import REGISTRY
-    from ntripmonitor_spark.plans.probes import _PB08_ROWS
-
-    rows = {r["k"]: r for r in REGISTRY["pb08_const_values"].fn(spark, SF).collect()}
-    assert len(rows) == len(_PB08_ROWS)
-    for k, x in _PB08_ROWS:
-        r = rows[k]
-        assert r["x"] == x
-        assert r["q0"] == math.floor(x * 1.0 + 0.5)
-        assert r["q6"] == math.floor(x * 1e6 + 0.5)
-        assert r["r7_ppm"] == math.floor(Fraction(k * 1000000, 7) + Fraction(1, 2))
-        assert r["rneg_ppm"] == math.floor(Fraction(-k * 1000000, 7) + Fraction(1, 2))
-    # the deliberate ties decide the documented way
-    assert rows[2]["q0"] == 3      # floor(2.5 + 0.5)
-    assert rows[3]["q0"] == -2     # floor(-2.5 + 0.5) = floor(-2.0)
-
-
-def test_probe_decompositions_are_consistent_with_canonicals(spark):
-    """The probes must agree with the canonical queries they decompose
-    — e.g. pb01's counts are dq03's count columns, pb12's estimates are
-    qa05's est_* columns — otherwise a probe row says nothing about the
-    canonical's red."""
-    from ntripmonitor_spark.plans import REGISTRY
+    ev = table(spark, SF, "events")
+    per_key: dict[int, int] = {}
+    for r in ev.select("user_id").collect():
+        per_key[r["user_id"]] = per_key.get(r["user_id"], 0) + 1
+    want: dict[int, list[int]] = {}
+    for uid, n in per_key.items():
+        a = want.setdefault((uid * 2654435761) % 4294967296 % 32, [0, 0, 0])
+        a[0] += 1
+        a[1] += n
+        a[2] = max(a[2], n)
+    total = sum(a[1] for a in want.values())
 
     dq03 = {r["partition_id"]: r for r in
             REGISTRY["dq03_key_skew_profile"].fn(spark, SF).collect()}
-    pb01 = {r["partition_id"]: r for r in
-            REGISTRY["pb01_dq03_counts"].fn(spark, SF).collect()}
-    assert set(dq03) == set(pb01)
-    for pid, r in pb01.items():
-        c = dq03[pid]
+    assert set(dq03) == set(want)
+    for pid, (n_keys, n_rows, max_key_rows) in want.items():
+        r = dq03[pid]
         assert (r["n_keys"], r["n_rows"], r["max_key_rows"]) == (
-            c["n_keys"], c["n_rows"], c["max_key_rows"])
-
-    pb03 = {r["partition_id"]: r for r in
-            REGISTRY["pb03_dq03_share_join"].fn(spark, SF).collect()}
-    for pid, r in pb03.items():
-        assert r["row_share_ppm"] == dq03[pid]["row_share_ppm"]
+            n_keys, n_rows, max_key_rows)
+        assert r["row_share_ppm"] == math.floor(
+            Fraction(n_rows * 1000000, total) + Fraction(1, 2))
 
     qa05 = {r["event_type"]: r for r in
             REGISTRY["qa05_histogram_quantiles"].fn(spark, SF).collect()}
-    pb12 = {r["event_type"]: r for r in
-            REGISTRY["pb12_qa05_est"].fn(spark, SF).collect()}
-    pb11 = {r["event_type"]: r for r in
-            REGISTRY["pb11_qa05_exact"].fn(spark, SF).collect()}
-    assert set(qa05) == set(pb12) == set(pb11)
-    for g, r in qa05.items():
-        for p in (50, 90, 99):
-            assert pb12[g][f"est_p{p}_ppm"] == r[f"est_p{p}_ppm"]
-            assert pb11[g][f"exact_p{p}_ppm"] == r[f"exact_p{p}_ppm"]
+    for q in (0.5, 0.9, 0.99):
+        p = int(q * 100)
+        est = {r["g"]: r[f"est_p{p}_ppm"]
+               for r in hq_est_leg(hq_cum(ev), q).collect()}
+        exact = {r["g"]: r[f"exact_p{p}_ppm"]
+                 for r in hq_exact_leg(hq_ranked(ev), q).collect()}
+        assert set(qa05) == set(est) == set(exact)
+        for g, r in qa05.items():
+            assert est[g] == r[f"est_p{p}_ppm"]
+            assert exact[g] == r[f"exact_p{p}_ppm"]
 
 
-def test_pb14_kept_set_matches_sp10_counts(spark):
-    """The per-doc keep flags aggregate to sp10's per-source kept
-    counts — the localizer and the canonical can't drift."""
+def test_pps_stage_kept_set_matches_sp10_counts(spark):
+    """The per-doc keep flags of sampling.pps_stage aggregate to sp10's
+    per-source kept counts — the stage and the rollup can't drift."""
+    from ntripmonitor_spark.operators.sampling import pps_stage
     from ntripmonitor_spark.plans import REGISTRY
+    from ntripmonitor_spark.tables import table
 
-    per_doc = REGISTRY["pb14_sp10_docs"].fn(spark, SF).collect()
-    kept = {}
-    for r in per_doc:
-        kept[r["source"]] = kept.get(r["source"], 0) + r["kept"]
+    kept: dict[str, int] = {}
+    for r in pps_stage(table(spark, SF, "documents")).collect():
+        kept[r["source"]] = kept.get(r["source"], 0) + int(r["bucket"] < r["cutoff"])
     sp10 = {r["source"]: r["n_kept"] for r in
             REGISTRY["sp10_pps_resample"].fn(spark, SF).collect()}
-    assert kept == {s: n for s, n in sp10.items()}
+    assert kept == sp10
 
 
-def test_pb13_f_milli_matches_tx19_rollup(spark):
-    """Per-doc f_milli sums/counts reproduce tx19's per-source rollup."""
+def test_doc_readability_f_milli_matches_tx19_rollup(spark):
+    """Per-doc f_milli sums/counts of text.doc_readability reproduce
+    tx19's per-source rollup."""
+    from ntripmonitor_spark.operators.text import doc_readability
     from ntripmonitor_spark.plans import REGISTRY
+    from ntripmonitor_spark.tables import table
 
-    per_doc = REGISTRY["pb13_tx19_docs"].fn(spark, SF).collect()
+    per_doc = doc_readability(
+        table(spark, SF, "documents"), keep_cols=("doc_id",)
+    ).collect()
     agg: dict[str, list[int]] = {}
     for r in per_doc:
         a = agg.setdefault(r["source"], [0, 0, 0, 0])  # docs, scored, fsum, easy
@@ -389,17 +362,17 @@ def test_pb13_f_milli_matches_tx19_rollup(spark):
         assert r["mean_flesch_e3"] == want_mean
 
 
-def test_pb10_histogram_state_is_mergeable(spark):
+def test_qa05_histogram_state_is_mergeable(spark):
     """The headline claim of the qa05 estimator: its integer bin-count
     state merges across shards by ADDITION. Split events into three
     disjoint batches, bin each on the (fixed) global grid, add the
-    count vectors — the sum must equal pb10's full-corpus state
-    exactly."""
-    from ntripmonitor_spark.plans import REGISTRY
+    count vectors — the sum must equal the full-corpus state of
+    stats.hq_cum exactly."""
+    from ntripmonitor_spark.operators.stats import hq_cum
     from ntripmonitor_spark.tables import table
 
-    full = {(r["event_type"], r["b"]): r["n"]
-            for r in REGISTRY["pb10_qa05_bins"].fn(spark, SF).collect()}
+    full = {(r["g"], r["b"]): r["n"]
+            for r in hq_cum(table(spark, SF, "events")).collect()}
 
     ev = table(spark, SF, "events").filter(F.col("value").isNotNull())
     ext = ev.agg(

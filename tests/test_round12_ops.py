@@ -31,7 +31,7 @@ def test_memo_collision_falls_back_to_fresh_build(spark, sf_dir):
 
 
 def test_memo_rearms_persist_after_clearcache(spark, sf_dir):
-    """catalog.clearCache() (bench drains between timed queries) strips
+    """catalog.clearCache() (callers drain cached state between runs) strips
     the persist marker from the memoized relation; the next hit must
     re-arm it so multi-consumer plans keep their one-scan shape."""
     from ntripmonitor_spark.operators.stats import clear_hq_memo, hq_cum

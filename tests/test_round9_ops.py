@@ -309,49 +309,6 @@ def test_tp08_conservation(spark):
 
 
 # ---------------------------------------------------------------------------
-# dq08 — why the DECIMAL canary discriminates
-# ---------------------------------------------------------------------------
-
-
-def test_dq08_canary_discriminates_decimal_canonicalization():
-    """Documents the failure mechanism the canary probes: a
-    driver-side engine that returns a DECIMAL(18,6) result as a
-    Python float canonicalizes through %.9g ('1.25'), while Spark
-    collects decimal.Decimal ('1.250000') — the two canonical strings
-    differ even though the VALUES are equal. The BIGINT and exact-
-    double controls in the same row canonicalize identically either
-    way, so a hash-red dq08 row isolates DECIMAL canonicalization as
-    the cause (and a green row refutes the round-9 hypothesis)."""
-    from decimal import Decimal
-
-    from tests.oracle import _canon_value
-
-    # DECIMAL column: Decimal-vs-float return types diverge
-    assert _canon_value(Decimal("1.250000")) == "1.250000"
-    assert _canon_value(1.25) == "1.25"
-    assert _canon_value(Decimal("1.250000")) != _canon_value(1.25)
-    # BIGINT control: ints canonicalize identically everywhere
-    assert _canon_value(5) == "5"
-    # exact-double control: both engines produce the identical double
-    assert _canon_value(5 * 0.25) == _canon_value(1.25)
-
-
-def test_dq08_canary_values_are_trivially_stable(spark):
-    """The canary's values must never be the reason it reds: 5 rows,
-    exact small integers, a DECIMAL re-scale of them, and an exactly
-    representable double (n * 0.25)."""
-    from decimal import Decimal
-
-    from ntripmonitor_spark.plans.pipeline import dq08_decimal_canary
-
-    rows = dq08_decimal_canary(spark, SF).collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert r["n_quarter_dec"] == Decimal(r["n_nations"]) * Decimal("0.250000")
-        assert r["n_quarter_dbl"] == r["n_nations"] * 0.25
-
-
-# ---------------------------------------------------------------------------
 # streaming fuzzy decontamination == batch scoring
 # ---------------------------------------------------------------------------
 

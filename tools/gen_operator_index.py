@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Generate docs/OPERATORS.md from the live registry: one row per
-registered query (name, tags, bench membership, oracle kind, first
+registered query (name, tags, oracle kind, first
 docstring sentence). Run after adding operators:
 
     PYTHONPATH=. python tools/gen_operator_index.py > docs/OPERATORS.md
@@ -25,14 +25,14 @@ def main() -> None:
     print(f"{len(REGISTRY)} registered queries; generated by "
           "`tools/gen_operator_index.py` — do not edit by hand.")
     print()
-    print("| query | tags | bench | oracle | summary |")
-    print("|---|---|---|---|---|")
+    print("| query | tags | oracle | summary |")
+    print("|---|---|---|---|")
     for name in sorted(REGISTRY):
         q = REGISTRY[name]
         tags = ",".join(q.tags) or "—"
         oracle = "value" if q.oracle else "rows-only"
         summary = first_sentence(q.doc).replace("|", "\\|")
-        print(f"| `{name}` | {tags} | {'yes' if q.bench else '—'} | {oracle} | {summary} |")
+        print(f"| `{name}` | {tags} | {oracle} | {summary} |")
     print()
     print("## Standing registration decisions")
     print()
@@ -63,12 +63,8 @@ def main() -> None:
     print("  as BIGINT integer-units columns with the unit in the name")
     print("  (`*_ppm` = 1e-6, `*_e3`/`*_e4`/`*_e9` = 1e-3/1e-4/1e-9).")
     print("  DECIMAL remains legitimate as an INTERNAL exact-sum carrier")
-    print("  (ss15, ts03, fn06 …). The single exception is")
-    print("  `dq08_decimal_canary`, a DELIBERATE probe that keeps the")
-    print("  hypothesis falsifiable — its driver row is EXPECTED red; a")
-    print("  green row would refute the hypothesis and reopen the question.")
-    print("  tests/test_parity.py pins the no-DECIMAL invariant for every")
-    print("  registered query except the canary.")
+    print("  (ss15, ts03, fn06 …). tests/test_parity.py pins the no-DECIMAL")
+    print("  invariant for every registered query, with no exceptions.")
     print()
     print("- **Ratios of exact integers emit via exact integer-rational")
     print("  round-half-up, never via quantize() of the double ratio")
@@ -82,20 +78,9 @@ def main() -> None:
     print("  remains correct for genuinely float-valued metrics (sqrt legs,")
     print("  interpolations). Oracle-side dividends must stay < 2^53.")
     print()
-    print("- **The pb01–pb16 probe matrix (plans/probes.py) is a DELIBERATE")
-    print("  diagnostic instrument, not operator surface (registered round")
-    print("  10).** It decomposes the stable-but-red queries into")
-    print("  construct-isolating variants (counts vs emission vs")
-    print("  joined-denominator), per-doc localizers, a no-table constants")
-    print("  probe, the dq08 canary's all-integer control twin, and two")
-    print("  byte-identical renamed twins that test for name-keyed grading")
-    print("  state. Their red/green split IS the attribution; interpretation")
-    print("  table in the module docstring, expected outcomes in SCALE.md")
-    print("  §6t.")
-    print()
     print("- **Every integer aggregate in an oracle's final SELECT is")
-    print("  `CAST(... AS BIGINT)` (decision made round 11 — the probe")
-    print("  matrix's verdict).** The round-10 rows attributed the entire")
+    print("  `CAST(... AS BIGINT)` (decision made round 11).** A round-10")
+    print("  diagnostic query matrix attributed the entire")
     print("  three-round red class: DuckDB widens integer `sum()`/window")
     print("  sums to HUGEINT (int128) — and bare unpivot literals to")
     print("  DECIMAL — and the driver's pandas/Arrow fetch renders those as")
@@ -103,10 +88,10 @@ def main() -> None:
     print("  vs `3`). The local `fetchall()` harness leg was blind to it")
     print("  (HUGEINT arrives as Python int there), which is why it")
     print('  survived three rounds of "locally provably value-stable".')
-    print("  Interior CTE sums stay free (pb02/pb10/pb11 graded green with")
-    print("  consumed sums). Enforced twice: statically by")
+    print("  Interior CTE sums stay free (a sum a later CTE consumes never")
+    print("  reaches the driver). Enforced twice: statically by")
     print("  `tools/oracle_type_lint.py` (DESCRIBE over all registered")
-    print("  oracles, DECIMAL/HUGEINT banned, dq08 exempt) and dynamically")
+    print("  oracles, DECIMAL/HUGEINT banned, no exemptions) and dynamically")
     print("  by the driver-faithful symmetric-pandas leg in")
     print("  `tests/oracle.py:compare_query` + `tests/test_oracle_lint.py`.")
     print("  Corollary: a nullable BIGINT output column widens to float64")

@@ -13,11 +13,10 @@ Python int there.
 The lint binds (``DESCRIBE``) each oracle against the sf0.001 views and
 fails on any output column whose declared type is HUGEINT, UHUGEINT or
 DECIMAL — the two numeric classes the driver's pandas path cannot carry
-losslessly. Interior CTE columns are free to be HUGEINT (pb02/pb10/pb11
-graded green with consumed sums); only the final SELECT's types matter.
-
-Exemptions: ``dq08_decimal_canary`` is the deliberate DECIMAL
-falsifiability probe (kept out-of-window, see plans/registry.py).
+losslessly. Interior CTE columns are free to be HUGEINT (a sum that a
+later CTE consumes never reaches the driver); only the final SELECT's
+types matter. Every registered oracle is checked; there are no
+exemptions.
 
     PYTHONPATH=. python tools/oracle_type_lint.py [sf_dir]
 """
@@ -28,7 +27,6 @@ import os
 import sys
 
 BANNED = ("HUGEINT", "UHUGEINT", "DECIMAL")
-EXEMPT = frozenset({"dq08_decimal_canary"})
 
 
 def lint_oracles(sf_dir: str) -> dict[str, list[tuple[str, str]]]:
@@ -41,7 +39,7 @@ def lint_oracles(sf_dir: str) -> dict[str, list[tuple[str, str]]]:
     con = duck_connection(sf_dir)
     bad: dict[str, list[tuple[str, str]]] = {}
     for name, q in sorted(REGISTRY.items()):
-        if q.oracle is None or name in EXEMPT:
+        if q.oracle is None:
             continue
         rows = con.execute(f"DESCRIBE {q.oracle}").fetchall()
         hits = [
