@@ -186,7 +186,7 @@ def casters_option(
 ) -> str:
     """Flatten caster groups into the ``ntrip_live`` source's
     ``casters`` JSON option: one entry per (caster, mountpoint) pair,
-    each becoming one stream partition (the Spark analogue of the
+    each getting one receiver thread and one caster connection (the
     reference's one-task-per-mountpoint topology,
     src/ingestion.py:61-95). ``max_readers`` caps the total, matching
     MAX_READERS semantics."""

@@ -32,7 +32,8 @@ def scan_frames(buf: bytes, final: bool = True) -> tuple[list[bytes], bytes]:
     Returns (frames, remainder). With ``final=False`` (stream
     carry-over mode) a candidate whose claimed length runs past the end
     of the buffer holds the tail for the next chunk — the reference's
-    wait-for-more-bytes behavior (`src/ntripclient.py:543-544`). With
+    wait-for-more-bytes behavior (`src/ntripclient.py:543-544`) —
+    unless a complete valid frame follows it in the buffer. With
     ``final=True`` (batch blobs) nothing more is coming, so the scan
     slides one byte and keeps searching instead of parking on a
     spurious preamble byte.
@@ -53,7 +54,11 @@ def scan_frames(buf: bytes, final: bool = True) -> tuple[list[bytes], bytes]:
         length = ((buf[idx + 1] & 0x03) << 8) | buf[idx + 2]
         end = idx + 3 + length + 3
         if end > n:
-            if final:
+            # Frames never overlap, so a complete CRC-valid frame later
+            # in the buffer proves this preamble spurious: slide past it
+            # instead of parking on it until ``length`` more bytes come
+            # (at the end of a stream they never do).
+            if final or scan_frames(buf[idx + 1:])[0]:
                 pos = idx + 1
                 continue
             return frames, buf[idx:]

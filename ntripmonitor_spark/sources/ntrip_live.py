@@ -1,35 +1,42 @@
-"""Live NTRIP streaming DataSource (S1) — one partition per mountpoint.
+"""Live NTRIP streaming DataSource (S1): caster receivers feeding the
+bronze frame spool.
 
-Executor-side readers hold a TCP/SSL connection to the caster (HTTP GET
-/{mountpoint}, Basic auth — `sources.ntrip_client`), run the
-chunked-transfer decoder and the frame aligner incrementally, and emit
-CRC-valid frames as (mountpoint, receive_time_us, frame) rows.
+The stream reader is the replay reader (``streaming.replay``) with a
+feeder attached. It runs in Spark's long-lived driver-side Python
+process; on its first offset call it starts one receiver thread per
+``casters`` entry. Each receiver holds ONE TCP/SSL connection to its
+mountpoint (HTTP GET /{mountpoint}, Basic auth —
+``sources.ntrip_client``), runs the chunked-transfer decoder and the
+frame aligner incrementally, and queues CRC-valid frames as
+(mountpoint, receive_time_us, frame) rows.
 
-Design notes (SURVEY.md §7.3):
+Design notes (SURVEY.md §7.3 "bronze first"):
 
-* A caster stream is NOT replayable, so offsets are batch generation
-  counters, not byte positions — delivery is at-least-once and the
-  first sink must be the bronze frame archive (from which everything
-  downstream re-derives deterministically; the replay source then
-  gives exact reprocessing).
-* Connection state (socket, chunk decoder, frame buffer) lives in a
-  per-executor cache keyed by (caster, mountpoint), surviving across
-  micro-batches while the Python worker is reused.
+* A caster stream is not replayable, so every ``latestOffset()``
+  writes what the receivers hold as one new immutable parquet segment
+  of the spool, and offsets are spool row positions. Batches read
+  spool ranges exactly as a replay reads the archive, so a replayed
+  batch reads the same frames: with the idempotent sinks, every frame
+  a caster sends reaches the sink exactly once.
+* The spool IS the bronze archive: ``replay.frames_stream`` over the
+  ``path`` option re-reads it. Restart durability needs ``path`` (and
+  the ``checkpoint`` option, as for a replay); without ``path`` the
+  spool is a fresh temporary directory.
 * Reconnect-with-backoff mirrors D7 (fixed 5 s,
   src/databasehandling.py:287-307).
 
 The protocol/alignment state machine (``MountpointStreamState``) is
-sans-IO and unit-tested; only ``_read_socket_window`` touches the
-network and is exercised against in-process fake sockets.
+sans-IO and unit-tested; only ``_Receivers`` touches the network.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSource
 
 from ntripmonitor_spark.sources.framing import scan_frames
 from ntripmonitor_spark.sources.ntrip_client import (
@@ -37,9 +44,10 @@ from ntripmonitor_spark.sources.ntrip_client import (
     build_request,
     parse_response_head,
 )
-from ntripmonitor_spark.streaming.replay import ARCHIVE_SCHEMA
+from ntripmonitor_spark.streaming.replay import ARCHIVE_SCHEMA, _ReplayReader
 
 RECONNECT_DELAY_S = 5.0  # D7: fixed NTRIP retry cadence
+_POLL_S = 0.2  # receive timeout: how often a receiver checks for stop()
 
 
 @dataclass
@@ -74,16 +82,6 @@ class MountpointStreamState:
         return frames
 
 
-class _MountpointPartition(InputPartition):
-    def __init__(self, idx: int, caster: dict):
-        self.idx = idx
-        self.caster = caster
-
-
-# Per-executor connection cache: (url, mountpoint) → (socket, state).
-_CONNECTIONS: dict = {}
-
-
 def _connect(caster: dict):
     import socket
     import ssl
@@ -103,77 +101,81 @@ def _connect(caster: dict):
     return sock
 
 
-def _read_socket_window(caster: dict, window_s: float) -> list[tuple[str, int, bytes]]:
-    """Read frames from one mountpoint connection for ~window_s."""
-    key = (caster["url"], caster["mountpoint"])
-    rows: list[tuple[str, int, bytes]] = []
-    deadline = time.monotonic() + window_s
-    while time.monotonic() < deadline:
-        conn = _CONNECTIONS.get(key)
-        if conn is None:
-            try:
-                sock = _connect(caster)
-                conn = (sock, MountpointStreamState(caster["mountpoint"]))
-                _CONNECTIONS[key] = conn
-            except OSError:
-                time.sleep(min(RECONNECT_DELAY_S, max(deadline - time.monotonic(), 0)))
-                continue
-        sock, state = conn
+class _Receivers:
+    """The live source's feeder: one receiver thread per caster entry,
+    all appending to one inbox. Threads start on ``start()``, so an
+    unstarted feeder pickles with its reader."""
+
+    def __init__(self, casters: list[dict]):
+        self.casters = casters
+
+    def start(self) -> None:
+        self._inbox: list[tuple[str, int, bytes]] = []
+        self._lock = threading.Lock()
+        self._stopping = threading.Event()
+        self._threads = [threading.Thread(target=self._receive, args=(c,), daemon=True)
+                         for c in self.casters]
+        for t in self._threads:
+            t.start()
+
+    def drain(self) -> list[tuple[str, int, bytes]]:
+        with self._lock:
+            rows = self._inbox[:]
+            self._inbox.clear()
+        return rows
+
+    def stop(self) -> list[tuple[str, int, bytes]]:
+        """Close the connections, join the threads, return the rest."""
+        self._stopping.set()
+        for t in self._threads:
+            t.join()
+        return self.drain()
+
+    def _receive(self, caster: dict) -> None:
+        """Thread body: hold one connection to the mountpoint and queue
+        its frames until ``stop()``. A refused connect, an EOF or a
+        non-200 answer closes the connection and retries after
+        ``RECONNECT_DELAY_S``."""
+        mp = caster["mountpoint"]
+        sock = state = None
         try:
-            sock.settimeout(max(min(deadline - time.monotonic(), 1.0), 0.05))
-            data = sock.recv(8192)
-            if not data:
-                raise ConnectionError("EOF")
-        # ConnectionError ⊂ OSError: the reconnect handler must come
-        # FIRST or a graceful EOF falls into the retry-same-socket arm
-        # and the dead connection is never dropped (D7 would stall).
-        except ConnectionError:
-            _CONNECTIONS.pop(key, None)
-            continue
-        except (TimeoutError, OSError):
-            continue
-        now_us = time.time_ns() // 1000
-        try:
-            for frame in state.feed(data):
-                rows.append((caster["mountpoint"], now_us, frame))
-        except ConnectionError:
-            _CONNECTIONS.pop(key, None)
-    return rows
-
-
-class _LiveReader(DataSourceStreamReader):
-    def __init__(self, options):
-        casters = options.get("casters")
-        if not casters:
-            raise ValueError(
-                'ntrip_live requires option casters=\'[{"url":…,"mountpoint":…,…}]\''
-            )
-        self.casters = json.loads(casters)
-        self.window_s = float(options.get("window_s", "1.0"))
-        self._gen = 0
-
-    def initialOffset(self) -> dict:
-        return {"gen": 0}
-
-    def latestOffset(self) -> dict:
-        # Live stream: every poll opens a new read window. Offsets are
-        # generation counters (non-replayable source — bronze-first).
-        self._gen += 1
-        return {"gen": self._gen}
-
-    def partitions(self, start: dict, end: dict):
-        return [_MountpointPartition(i, c) for i, c in enumerate(self.casters)]
-
-    def read(self, partition: _MountpointPartition):
-        return iter(_read_socket_window(partition.caster, self.window_s))
-
-    def commit(self, end: dict) -> None:
-        pass
+            while not self._stopping.is_set():
+                if sock is None:
+                    try:
+                        sock = _connect(caster)
+                    except OSError:
+                        self._stopping.wait(RECONNECT_DELAY_S)
+                        continue
+                    sock.settimeout(_POLL_S)
+                    state = MountpointStreamState(mp)
+                try:
+                    data = sock.recv(65536)
+                    if not data:
+                        raise ConnectionError("EOF")
+                    frames = state.feed(data)
+                # TimeoutError ⊂ OSError: the timeout arm must come FIRST
+                # or every idle poll drops the connection; everything else
+                # (graceful EOF, reset, non-200) reconnects (D7).
+                except TimeoutError:  # poll the stop flag
+                    continue
+                except OSError:
+                    sock.close()
+                    sock = None
+                    self._stopping.wait(RECONNECT_DELAY_S)
+                    continue
+                if frames:
+                    now_us = time.time_ns() // 1000
+                    with self._lock:
+                        self._inbox.extend((mp, now_us, f) for f in frames)
+        finally:
+            if sock is not None:
+                sock.close()
 
 
 class NtripLiveDataSource(DataSource):
-    """``spark.readStream.format("ntrip_live")
-    .option("casters", json).option("window_s", "1.0")``"""
+    """``spark.readStream.format("ntrip_live").option("casters", json)
+    .option("path", spool_dir)`` — ``path`` is the deployment's bronze
+    spool (optional; needed for restart durability)."""
 
     @classmethod
     def name(cls) -> str:
@@ -183,7 +185,12 @@ class NtripLiveDataSource(DataSource):
         return ARCHIVE_SCHEMA
 
     def streamReader(self, schema):
-        return _LiveReader(self.options)
+        casters = self.options.get("casters")
+        if not casters:
+            raise ValueError(
+                'ntrip_live requires option casters=\'[{"url":…,"mountpoint":…,…}]\''
+            )
+        return _ReplayReader(self.options, feeder=_Receivers(json.loads(casters)))
 
 
 def register_live_source(spark) -> None:

@@ -22,10 +22,6 @@ def stream_packages(frames: DataFrame) -> DataFrame:
     return rtcm.packages(rtcm.decode_frames(frames))
 
 
-def stream_observations(frames: DataFrame) -> DataFrame:
-    return rtcm.observations(rtcm.decode_frames(frames))
-
-
 _UNIT_SECONDS = {
     "second": 1, "seconds": 1, "minute": 60, "minutes": 60,
     "hour": 3600, "hours": 3600, "day": 86400, "days": 86400,
@@ -131,12 +127,11 @@ def idempotent_parquet_sink(base_path: str):
     return write
 
 
-def decoded_parquet_sink(out_path: str, obs_path: str | None = None,
-                         store_observations: bool = True):
-    """foreachBatch body over a DECODED stream: envelope always, routed
-    observations behind the K7 gate (reference
-    ``DB_STORE_OBSERVATIONS=false`` ⇒ envelope-only,
-    src/ingestion.py:944). Same batch_id=N overwrite discipline as
+def decoded_parquet_sink(out_path: str, obs_path: str):
+    """foreachBatch body over a DECODED stream: the envelope and the
+    routed observations (the K7 gate's on state; envelope-only runs
+    keep the projection in the streaming plan, see
+    ``start_archive_stream``). Same batch_id=N overwrite discipline as
     ``idempotent_parquet_sink`` — replayed batch ids cannot
     double-write. One decode feeds both projections (the batch is
     persisted across the two writes).
@@ -149,17 +144,6 @@ def decoded_parquet_sink(out_path: str, obs_path: str | None = None,
     from ntripmonitor_spark.operators import rtcm as rtcm_ops
 
     def write(decoded: DataFrame, batch_id: int) -> None:
-        # Envelope-only mode writes ONE projection: persisting the wide
-        # decoded batch (22 columns + per-sat arrays) would pay a cache
-        # materialization nobody reads twice (round-13, guide §5 —
-        # persist only on reuse; measured ~25% of the per-batch sink
-        # time at 1000-row batches). The decode feeds the write in one
-        # pass instead.
-        if not (store_observations and obs_path):
-            rtcm_ops.packages(decoded).write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch_id={batch_id}")
-            )
-            return
         decoded.persist()
         try:
             rtcm_ops.packages(decoded).write.mode("overwrite").parquet(
@@ -217,7 +201,7 @@ def start_archive_stream(spark, archive_path: str, out_path: str,
     return (
         decoded.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
-        .foreachBatch(decoded_parquet_sink(out_path, obs_path, store_observations))
+        .foreachBatch(decoded_parquet_sink(out_path, obs_path))
         .trigger(processingTime="0 seconds")
         .start()
     )

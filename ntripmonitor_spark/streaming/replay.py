@@ -1,20 +1,27 @@
-"""Replay streaming source — a custom PySpark ``DataSource``.
+"""Frame stream source — a custom PySpark ``DataSource`` over the
+bronze frame archive.
 
 Replays an archived frame table (parquet written by
 ``write_frame_archive``) as a rate-limited micro-batch stream with
-real offset tracking, exercising the same source contract the live
-NTRIP source needs (SURVEY.md §2.1 S1; offsets are archive row
+real offset tracking (SURVEY.md §2.1 S1; offsets are archive row
 positions, the durable analog of the reference's
 connection-relative byte positions — §7.3 "bronze first").
 
-The live-caster variant would swap the archive iterator for
-``sources.ntrip_client`` socket reads per mountpoint partition; the
-frame-alignment state machine (``scan_frames(final=False)``) and the
-offset/commit plumbing are identical, which is exactly what the replay
-path tests.
+The archive is a directory of immutable parquet segments read in file
+name order; a single-file archive is a spool with one segment. The
+live NTRIP source (``sources.ntrip_live``) is this same reader with a
+feeder attached: each ``latestOffset()`` drains the frames its caster
+receivers hold into one new segment, and the batch reads that range
+back like any archive range. A replayable source plus the idempotent
+sinks is what makes live ingest exactly-once.
 """
 
 from __future__ import annotations
+
+import bisect
+import functools
+import json
+import os
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -36,6 +43,7 @@ ARCHIVE_SCHEMA = StructType(
         StructField("frame", BinaryType()),
     ]
 )
+_COLUMNS = [f.name for f in ARCHIVE_SCHEMA.fields]
 
 
 def write_frame_archive(frames_df, path: str) -> None:
@@ -54,69 +62,112 @@ def write_frame_archive(frames_df, path: str) -> None:
 
 
 class _ReplayPartition(InputPartition):
-    def __init__(self, path: str, lo: int, hi: int):
-        self.path = path
-        self.lo = lo
-        self.hi = hi
+    """One micro-batch: ``slices`` are (segment file, first row in the
+    file, row count), in archive order."""
+
+    def __init__(self, slices: list[tuple[str, int, int]]):
+        self.slices = slices
 
 
-# Archive tables cached per Python WORKER (keyed by path): executor
-# workers are reused across tasks (spark.python.worker.reuse), so a
-# replay run opens/decodes each archive parquet once per worker, not
-# once per micro-batch (guide §4.5 heavyweight-init-once). Bounded by
-# the handful of archives a process replays.
-_ARCHIVE_CACHE: dict = {}
+# Segment tables cached per Python WORKER, keyed by segment file:
+# executor workers are reused across tasks (spark.python.worker.reuse),
+# so a replay opens/decodes each segment once per worker, not once per
+# micro-batch (guide §4.5 heavyweight-init-once). Segments are
+# immutable, so the file name is the whole key; LRU-bounded so an
+# unbounded live spool keeps only the last few segments.
+@functools.lru_cache(maxsize=4)
+def _segment_table(path: str):
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path, columns=_COLUMNS).combine_chunks()
 
 
-def _archive_table(path: str):
-    table = _ARCHIVE_CACHE.get(path)
-    if table is None:
-        import pyarrow.dataset as ds
+def _exit_once(signum, frame):
+    import signal
+    import sys
 
-        table = ds.dataset(path, format="parquet").to_table(
-            columns=["mountpoint", "receive_time_us", "frame"]
-        ).combine_chunks()
-        _ARCHIVE_CACHE[path] = table
-    return table
+    signal.signal(signal.SIGTERM, signal.SIG_IGN)  # a repeat would cut stop() short
+    sys.exit()
 
 
 class _ReplayReader(DataSourceStreamReader):
     """Partition-based stream reader: offsets are archive row
-    positions; the DATA is read executor-side (round-13 — the former
-    SimpleDataSourceStreamReader read every ingest byte on the DRIVER
-    and re-shipped it through the JVM per micro-batch, a guide-§5
-    driver bottleneck that caps ingest at driver bandwidth at scale;
-    now the driver handles only integer offsets and each batch's task
-    slices the worker-cached Arrow table zero-copy)."""
+    positions; the DATA is read executor-side (the driver handles only
+    integer offsets and segment row counts, and each batch's task
+    slices worker-cached Arrow tables zero-copy).
 
-    def __init__(self, options):
+    ``feeder`` (the live source's caster receivers) turns the archive
+    into a spool: every ``latestOffset()`` appends what the feeder
+    received as one new segment, and ``stop()`` flushes the rest."""
+
+    def __init__(self, options, feeder=None):
         self.path = options.get("path")
-        if not self.path:
+        if not self.path and feeder is None:
             raise ValueError("ntrip_replay requires option 'path'")
+        self.feeder = feeder
         self.batch_rows = int(options.get("batchrows", "1000"))
         # Restart safety: latestOffset() has no access to the engine's
         # restored position, so a restarted query would otherwise
         # re-plan from row 0 (duplicates). The checkpoint location is
         # passed down as an option and the cursor recovers from the
         # query's OWN offset log (the last planned batch's end offset).
-        # Local-filesystem checkpoints only — this replay source is the
-        # archive test/bench source by design (the live NTRIP source
-        # tracks connection byte positions instead).
+        # Local-filesystem checkpoints only.
         self.ckpt = options.get("checkpoint")
-        self._n = None       # archive row count (parquet footer metadata)
+        self._files: list[str] | None = None  # segments, archive order
+        self._starts: list[int] = [0]  # first row of each segment, then the total
         self._cur: int | None = None  # replay cursor (row position)
 
-    def _count(self) -> int:
-        if self._n is None:
-            import pyarrow.dataset as ds
+    def _open(self) -> None:
+        """List the archive's segments once (row counts from parquet
+        footers) and start the feeder; later segments are only ever
+        appended by this reader."""
+        if self._files is not None:
+            return
+        import pyarrow.dataset as ds
 
-            self._n = ds.dataset(self.path, format="parquet").count_rows()
-        return self._n
+        if self.feeder is not None:
+            import fcntl
+            import signal
+            import tempfile
+
+            self._tmp = not self.path
+            self.path = self.path or tempfile.mkdtemp(prefix="ntrip-spool-")
+            os.makedirs(self.path, exist_ok=True)
+            # One writer per spool: a restarted query waits here for
+            # the previous query's process to flush and exit.
+            self._lock = open(os.path.join(self.path, ".lock"), "w")
+            fcntl.flock(self._lock, fcntl.LOCK_EX)
+            # Spark ends this process with SIGTERM when the query stops;
+            # exiting through SystemExit runs the runner's
+            # ``finally: reader.stop()``, which spools the frames the
+            # receivers still hold.
+            signal.signal(signal.SIGTERM, _exit_once)
+        self._files = []
+        for frag in ds.dataset(self.path, format="parquet").get_fragments():
+            self._files.append(frag.path)
+            self._starts.append(self._starts[-1] + frag.count_rows())
+        if self.feeder is not None:
+            self.feeder.start()
+
+    def _append(self, rows: list[tuple[str, int, bytes]]) -> None:
+        """Write ``rows`` as the next immutable segment: a temporary
+        (listing-invisible) name, then an atomic rename, so a crash
+        never leaves a partial segment that a restart would count."""
+        if not rows:
+            return
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table = pa.table(dict(zip(_COLUMNS, zip(*rows))))
+        first = self._starts[-1]
+        name = os.path.join(self.path, f"part-{first:020d}.parquet")
+        tmp = os.path.join(self.path, f".part-{first:020d}.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, name)
+        self._files.append(name)
+        self._starts.append(first + len(rows))
 
     def _recovered_cursor(self) -> int:
-        import json
-        import os
-
         if not self.ckpt:
             return 0
         offsets_dir = os.path.join(self.ckpt, "offsets")
@@ -144,24 +195,31 @@ class _ReplayReader(DataSourceStreamReader):
         # starting from the recovered WAL position on restart. The
         # engine replays any uncommitted tail from its own offset log;
         # this cursor only governs NEW batches.
+        self._open()
+        if self.feeder is not None:
+            self._append(self.feeder.drain())
         if self._cur is None:
             self._cur = self._recovered_cursor()
-        self._cur = min(self._cur + self.batch_rows, self._count())
+        self._cur = min(self._cur + self.batch_rows, self._starts[-1])
         return {"row": self._cur}
 
     def partitions(self, start: dict, end: dict):
         # One partition per micro-batch: preserves the one-file-per-
-        # batch sink layout and matches the caster-connection-grained
-        # parallelism of the live source (mountpoint partitions).
-        return [_ReplayPartition(self.path, start["row"], end["row"])]
+        # batch sink layout.
+        self._open()
+        lo, hi = start["row"], min(end["row"], self._starts[-1])
+        i = bisect.bisect_right(self._starts, lo) - 1
+        slices = []
+        while lo < hi:
+            n = min(hi, self._starts[i + 1]) - lo
+            slices.append((self._files[i], lo - self._starts[i], n))
+            lo, i = lo + n, i + 1
+        return [_ReplayPartition(slices)]
 
     def read(self, partition: _ReplayPartition):
-        table = _archive_table(partition.path)
-        # zero-copy slice of the worker-cached table, yielded as ONE
-        # Arrow batch — no per-row Python
-        yield from table.slice(
-            partition.lo, partition.hi - partition.lo
-        ).to_batches()
+        # zero-copy slices of worker-cached tables — no per-row Python
+        for path, lo, n in partition.slices:
+            yield from _segment_table(path).slice(lo, n).to_batches()
 
     def commit(self, end: dict) -> None:
         # Belt-and-braces restart sync: committed batches can only move
@@ -169,6 +227,18 @@ class _ReplayReader(DataSourceStreamReader):
         # engine callback is a commit of the recovered batch).
         if self._cur is None or end["row"] > self._cur:
             self._cur = end["row"]
+
+    def stop(self) -> None:
+        if self.feeder is None or self._files is None:
+            return
+        rows = self.feeder.stop()
+        if self._tmp:  # nothing can resume from a temporary spool
+            import shutil
+
+            shutil.rmtree(self.path, ignore_errors=True)
+        else:
+            self._append(rows)
+        self._lock.close()
 
 
 class NtripReplayDataSource(DataSource):

@@ -131,13 +131,18 @@ def compare_query(
     s_rows = [tuple(r) for r in sdf.collect()]
 
     con = duck_connection(sf_dir)
-    cur = con.execute(oracle_sql)
+    # Run the oracle ONCE; both fetch legs read the materialised result.
+    con.execute(f"CREATE TEMP TABLE oracle_result AS {oracle_sql}")
+    cur = con.execute("SELECT * FROM oracle_result")
     d_cols = [c[0] for c in cur.description]
     date_cols = frozenset(
         c[0] for c in cur.description if str(c[1]).upper() == "DATE"
     )
     d_rows = cur.fetchall()
-    pdf = con.execute(oracle_sql).fetchdf() if driver_faithful else None
+    pdf = (
+        con.execute("SELECT * FROM oracle_result").fetchdf()
+        if driver_faithful else None
+    )
     declared = (
         con.execute(f"DESCRIBE {oracle_sql}").fetchall() if driver_faithful else []
     )

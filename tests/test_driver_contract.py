@@ -5,10 +5,13 @@ surface so a refactor cannot silently break what callers consume."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_entry_contract(spark):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     import __spark_entry__ as E
 
     df = E.entry(spark)
@@ -18,7 +21,7 @@ def test_entry_contract(spark):
 
 
 def test_queries_and_oracles_contract(spark):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     import __spark_entry__ as E
 
     from ntripmonitor_spark.plans import REGISTRY
@@ -47,7 +50,7 @@ def test_queries_survive_non_utc_driver_session():
 
     code = """
 import sys
-sys.path.insert(0, '/root/repo'); sys.path.insert(0, '/root/repo/tests')
+sys.path[:0] = [sys.argv[1] + '/tests', sys.argv[1]]
 from pyspark.sql import SparkSession
 import __spark_entry__ as E
 from tests.oracle import compare_query
@@ -78,8 +81,8 @@ print('NONUTC_OK')
 spark.stop()
 """
     out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True,
-        timeout=600, cwd="/root/repo",
+        [sys.executable, "-c", code, str(ROOT)], capture_output=True, text=True,
+        timeout=600, cwd=ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "NONUTC_OK" in out.stdout
@@ -91,14 +94,14 @@ def test_operator_index_is_current():
     import io
     import contextlib
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     import gen_operator_index
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         gen_operator_index.main()
     want = buf.getvalue()
-    got = open("/root/repo/docs/OPERATORS.md").read()
+    got = (ROOT / "docs" / "OPERATORS.md").read_text()
     assert got == want, "docs/OPERATORS.md is stale — regenerate it"
 
 

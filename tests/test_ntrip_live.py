@@ -1,19 +1,24 @@
 """Live-source tests: sans-IO stream state machine (HTTP head →
-chunked decode → frame alignment), reader offset/partition plumbing,
-and a loopback-socket end-to-end read."""
+chunked decode → frame alignment), the spool's row offsets and
+partitions, loopback-socket receivers, and exactly-once ingest across
+a query restart."""
 
 from __future__ import annotations
 
 import json
+import os
 import socket
 import threading
+import time
 
 from ntripmonitor_spark.sources.encoder import encode_1029, encode_msm
 from ntripmonitor_spark.sources.ntrip_live import (
     MountpointStreamState,
-    _LiveReader,
-    _read_socket_window,
+    NtripLiveDataSource,
+    _Receivers,
 )
+from ntripmonitor_spark.streaming import replay
+from ntripmonitor_spark.streaming.replay import ARCHIVE_SCHEMA
 
 
 def _frames():
@@ -66,22 +71,75 @@ def test_stream_state_rejects_non_200():
     assert raised
 
 
-def test_reader_offsets_and_partitions():
+class _FakeFeeder:
+    """Stands in for the caster receivers: each drain() hands over the
+    next scripted list of received rows; stop() hands over a tail."""
+
+    def __init__(self, drains, tail):
+        self.drains, self.tail = list(drains), tail
+
+    def start(self):
+        pass
+
+    def drain(self):
+        return self.drains.pop(0) if self.drains else []
+
+    def stop(self):
+        return self.tail
+
+
+def _read_rows(reader, start, end):
+    (part,) = reader.partitions(start, end)  # one partition per micro-batch
+    return [(r["mountpoint"], r["receive_time_us"], r["frame"])
+            for b in reader.read(part) for r in b.to_pylist()]
+
+
+def test_reader_offsets_and_partitions(tmp_path, monkeypatch):
+    """Live offsets are spool row positions: every latestOffset()
+    spools what the receivers hold as one segment, partitions slice
+    row ranges across segments, stop() spools the tail, and a
+    restarted reader lists the same rows in the same order."""
+    import signal
+
+    monkeypatch.setattr(signal, "signal", lambda *a: None)  # keep pytest's SIGTERM
     casters = [
         {"url": "http://caster:2101", "mountpoint": "MP1"},
         {"url": "http://caster:2101", "mountpoint": "MP2"},
     ]
-    r = _LiveReader({"casters": json.dumps(casters), "window_s": "0.1"})
-    assert r.initialOffset() == {"gen": 0}
+    spool = str(tmp_path / "spool")
+    r = NtripLiveDataSource(
+        {"casters": json.dumps(casters), "path": spool}
+    ).streamReader(ARCHIVE_SCHEMA)
+    assert [c["mountpoint"] for c in r.feeder.casters] == ["MP1", "MP2"]
+    segments = [[("MP1", 10 * i, b"a%d" % i), ("MP2", 10 * i + 1, b"b%d" % i)]
+                for i in range(6)]
+    r.feeder = _FakeFeeder(segments, tail=[("MP2", 99, b"tail")])  # no sockets
+    assert r.initialOffset() == {"row": 0}
     o1, o2 = r.latestOffset(), r.latestOffset()
-    assert o2["gen"] == o1["gen"] + 1
-    parts = r.partitions(o1, o2)
-    assert [p.caster["mountpoint"] for p in parts] == ["MP1", "MP2"]
+    assert (o1, o2) == ({"row": 2}, {"row": 4})
+    rows = _read_rows(r, o1, o2)
+    assert [m for m, _, _ in rows] == ["MP1", "MP2"]
+    assert [f for _, _, f in rows] == [b"a1", b"b1"]
+    # a range that starts and ends inside segments slices both ends
+    mid = _read_rows(r, {"row": 1}, {"row": 3})
+    assert [f for _, _, f in mid] == [b"b0", b"a1"]
+
+    offsets = [r.latestOffset() for _ in range(5)]
+    assert offsets[-1] == offsets[-2] == {"row": 12}  # nothing new received
+    everything = _read_rows(r, r.initialOffset(), offsets[-1])
+    assert everything == [row for seg in segments for row in seg]
+    # the worker cache holds a bounded number of segment tables
+    assert replay._segment_table.cache_info().currsize <= 4
+
+    r.stop()
+    restarted = replay._ReplayReader({"path": spool, "batchrows": "5"})
+    assert restarted.latestOffset() == {"row": 5}
+    assert _read_rows(restarted, {"row": 0}, {"row": 13}) == everything + [("MP2", 99, b"tail")]
 
 
 def test_read_socket_window_loopback():
     """Serve two frames over a real loopback socket and read them
-    through the full connect→HTTP→align path."""
+    through the full connect→HTTP→align path of one receiver."""
     f1, f2 = _frames()
     srv = socket.socket()
     srv.bind(("127.0.0.1", 0))
@@ -96,8 +154,14 @@ def test_read_socket_window_loopback():
 
     t = threading.Thread(target=serve, daemon=True)
     t.start()
-    caster = {"url": f"http://127.0.0.1:{port}", "mountpoint": "LOOP"}
-    rows = _read_socket_window(caster, window_s=1.5)
+    receivers = _Receivers([{"url": f"http://127.0.0.1:{port}", "mountpoint": "LOOP"}])
+    receivers.start()
+    rows = []
+    deadline = time.monotonic() + 10
+    while len(rows) < 2 and time.monotonic() < deadline:
+        rows += receivers.drain()
+        time.sleep(0.05)
+    rows += receivers.stop()
     t.join(timeout=2)
     srv.close()
     assert [r[2] for r in rows] == [f1, f2]
@@ -108,8 +172,6 @@ def test_live_source_through_readstream(spark, tmp_path):
     """Full Structured Streaming path: spark.readStream against a live
     loopback caster → memory sink; frames arrive CRC-valid with the
     mountpoint column attached."""
-    import time
-
     from ntripmonitor_spark.sources.ntrip_live import register_live_source
 
     f1, f2 = _frames()
@@ -132,7 +194,7 @@ def test_live_source_through_readstream(spark, tmp_path):
             try:
                 conn.recv(4096)
                 conn.sendall(b"ICY 200 OK\r\n\r\n" + f1 + f2)
-                # hold the connection briefly so the reader window drains
+                # hold the connection briefly before the caster drops it
                 time.sleep(1.0)
                 conn.close()
             except OSError:
@@ -146,7 +208,7 @@ def test_live_source_through_readstream(spark, tmp_path):
         q = (
             spark.readStream.format("ntrip_live")
             .option("casters", json.dumps(casters))
-            .option("window_s", "0.8")
+            .option("path", str(tmp_path / "spool"))
             .load()
             .writeStream.format("memory")
             .queryName("live_rs")
@@ -218,11 +280,12 @@ def test_chaos_drop_replay_exactly_once(spark, tmp_path, monkeypatch):
 
     t = threading.Thread(target=serve, daemon=True)
     t.start()
-    caster = {"url": f"http://127.0.0.1:{port}", "mountpoint": "CHAOS"}
+    receivers = _Receivers([{"url": f"http://127.0.0.1:{port}", "mountpoint": "CHAOS"}])
+    receivers.start()
     try:
-        rows = _read_socket_window(caster, window_s=6.0)
+        t.join(timeout=10)
     finally:
-        t.join(timeout=5)
+        rows = receivers.stop()
         srv.close()
 
     got = [r[2] for r in rows]
@@ -273,3 +336,167 @@ def test_chaos_drop_replay_exactly_once(spark, tmp_path, monkeypatch):
     s1, s2 = sess.orderBy("session_start").collect()
     gap_s = (s2["session_start"] - s1["session_end"]).total_seconds()
     assert gap_s >= 0.5, f"reconnect gap missing ({gap_s}s)"
+
+
+class _LoopbackCaster:
+    """Threaded loopback caster: ``send`` copies frames to every open
+    connection of a mountpoint (plain ICY body or chunked transfer, per
+    mountpoint) and records them as served; connections opened and
+    still open are counted per mountpoint."""
+
+    def __init__(self, chunked: dict[str, bool]):
+        self.chunked = chunked
+        self.srv = socket.create_server(("127.0.0.1", 0))
+        self.port = self.srv.getsockname()[1]
+        self.lock = threading.Lock()
+        self.conns: dict[str, list] = {mp: [] for mp in chunked}
+        self.opened = dict.fromkeys(chunked, 0)
+        self.served: list[tuple[str, bytes]] = []
+        threading.Thread(target=self._accept, daemon=True).start()
+
+    def casters(self):
+        return [{"url": f"http://127.0.0.1:{self.port}", "mountpoint": mp}
+                for mp in self.chunked]
+
+    def _accept(self):
+        while True:
+            try:
+                conn, _ = self.srv.accept()
+            except OSError:
+                return
+            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+
+    def _serve(self, conn):
+        mp = conn.recv(4096).split(b" ")[1].decode().lstrip("/")
+        conn.sendall(b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
+                     if self.chunked[mp] else b"ICY 200 OK\r\n\r\n")
+        with self.lock:
+            self.conns[mp].append(conn)
+            self.opened[mp] += 1
+        try:
+            while conn.recv(4096):  # clients send nothing after the GET
+                pass
+        except OSError:
+            pass
+        with self.lock:
+            self.conns[mp].remove(conn)
+        conn.close()
+
+    def open_connections(self) -> int:
+        with self.lock:
+            return sum(len(c) for c in self.conns.values())
+
+    def send(self, mp: str, frames: list[bytes]) -> None:
+        body = b"".join(frames)
+        with self.lock:
+            assert self.conns[mp], f"{mp} has no client"
+            for conn in self.conns[mp]:
+                if self.chunked[mp]:  # two chunks, split mid-frame
+                    h = len(body) // 2
+                    for part in (body[:h], body[h:]):
+                        conn.sendall(b"%x\r\n" % len(part) + part + b"\r\n")
+                else:
+                    conn.sendall(body)
+            self.served += [(mp, f) for f in frames]
+
+    def close(self):
+        self.srv.close()
+
+
+def _wait(cond, what: str, timeout: float = 60.0):
+    deadline = time.monotonic() + timeout
+    while not cond():
+        assert time.monotonic() < deadline, f"timed out waiting for {what}"
+        time.sleep(0.1)
+
+
+def test_live_restart_exactly_once(spark, tmp_path):
+    """Stop the live query mid-stream and restart it on the same spool
+    ``path`` and checkpoint, twice: every served frame reaches the
+    idempotent sink exactly once, each run holds one connection per
+    mountpoint, stopping closes every connection and spools what the
+    receivers hold, and the spool replays as the bronze archive of
+    exactly what the sink holds."""
+    import pyarrow.dataset as ds
+
+    from ntripmonitor_spark.sources.ntrip_live import register_live_source
+    from ntripmonitor_spark.streaming.pipeline import idempotent_parquet_sink
+    from ntripmonitor_spark.streaming.replay import frames_stream
+
+    caster = _LoopbackCaster({"PLAIN": False, "CHUNKED": True})
+    spool, sink = str(tmp_path / "spool"), str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    register_live_source(spark)
+
+    def start(interval: str):
+        return (
+            spark.readStream.format("ntrip_live")
+            .option("casters", json.dumps(caster.casters()))
+            .option("path", spool)
+            .option("checkpoint", ckpt)
+            .load()
+            .writeStream.option("checkpointLocation", ckpt)
+            .foreachBatch(idempotent_parquet_sink(sink))
+            .trigger(processingTime=interval)
+            .start()
+        )
+
+    def rows(path: str, **kw):
+        if not os.path.isdir(path):
+            return []
+        t = ds.dataset(path, format="parquet", **kw).to_table()
+        if t.num_rows == 0:  # nothing written yet
+            return []
+        return list(zip(t.column("mountpoint").to_pylist(),
+                        t.column("receive_time_us").to_pylist(),
+                        t.column("frame").to_pylist()))
+
+    def sink_rows():
+        return rows(sink, partitioning="hive")
+
+    def serve_round(tag: str):
+        for mp in caster.chunked:
+            caster.send(mp, [encode_1029(1, 100, k, f"{tag} {mp} {k}") for k in range(5)])
+
+    def run(tags: list[str], n_run: int, interval: str = "0 seconds", drain: bool = True):
+        q = start(interval)
+        try:
+            _wait(lambda: min(caster.opened.values()) == n_run, "connections")
+            if interval != "0 seconds":  # serve only once the trigger idles
+                _wait(lambda: q.recentProgress and not q.status["isTriggerActive"],
+                      "the first trigger")
+            for i, tag in enumerate(tags):
+                serve_round(tag)
+                if i + 1 < len(tags) or drain:
+                    n = len(caster.served)
+                    _wait(lambda: len(sink_rows()) >= n, "the sink")
+            if not drain:
+                time.sleep(1.0)  # received, perhaps not yet spooled or committed
+        finally:
+            q.stop()
+        assert caster.opened == {"PLAIN": n_run, "CHUNKED": n_run}
+        _wait(lambda: caster.open_connections() == 0, "connections to close", 10)
+
+    try:
+        run(["r1a", "r1b"], n_run=1, drain=False)
+        # no trigger after the first: only stop() can spool round r2
+        run(["r2"], n_run=2, interval="1 hour", drain=False)
+        _wait(lambda: len(rows(spool)) == 30, "stop() to spool the received frames")
+        assert not any(b"r2 " in f for _, _, f in sink_rows())
+        run(["r3"], n_run=3)  # same path and checkpoint
+        got = sink_rows()
+    finally:
+        caster.close()
+    served = sorted(caster.served)
+    assert len(served) == 40
+    assert sorted((m, f) for m, _, f in got) == served  # exactly once
+
+    q = (frames_stream(spark, spool, batch_rows=7).writeStream.format("memory")
+         .queryName("live_spool_replay")
+         .option("checkpointLocation", str(tmp_path / "ckpt_replay")).start())
+    q.processAllAvailable()
+    q.stop()
+    replayed = spark.sql(
+        "SELECT mountpoint, unix_micros(receive_time) AS t, frame FROM live_spool_replay"
+    ).collect()
+    assert sorted((r.mountpoint, r.t, bytes(r.frame)) for r in replayed) == sorted(got)

@@ -138,6 +138,22 @@ def test_framing_stream_carryover():
     assert got == [f1, f2]
 
 
+def test_framing_stream_spurious_preamble_does_not_park():
+    """A junk 0xD3 whose claimed length runs past the received bytes
+    must not hold back the complete frame behind it: at the end of a
+    caster's stream the claimed bytes never arrive."""
+    f1 = encode_1029(1, 1, 1, "hello")
+    f2, _, _ = _msm_frame()
+    stream = f1 + b"\xd3\x03\xff\x00" + f2  # junk preamble claims 1023 bytes
+    got, buf = [], b""
+    for i in range(0, len(stream), 7):
+        buf += stream[i : i + 7]
+        fs, buf = scan_frames(buf, final=False)
+        got.extend(fs)
+    assert got == [f1, f2]
+    assert buf == b""
+
+
 _EPOCH_ROWS = [
     # (receive_time, epoch_ms, msg_type) → expected obs_epoch
     # plain same-day GPS
