@@ -14,14 +14,15 @@ Design notes (SURVEY.md §7.3 "bronze first"):
 
 * A caster stream is not replayable, so every ``latestOffset()``
   writes what the receivers hold as one new immutable parquet segment
-  of the spool, and offsets are spool row positions. Batches read
-  spool ranges exactly as a replay reads the archive, so a replayed
-  batch reads the same frames: with the idempotent sinks, every frame
-  a caster sends reaches the sink exactly once.
+  of the spool, and offsets are spool row positions; each batch takes
+  everything spooled so far. Batches read spool ranges exactly as a
+  replay reads the archive, so a replayed batch reads the same frames:
+  with the idempotent sinks, every frame a caster sends reaches the
+  sink exactly once.
 * The spool IS the bronze archive: ``replay.frames_stream`` over the
-  ``path`` option re-reads it. Restart durability needs ``path`` (and
-  the ``checkpoint`` option, as for a replay); without ``path`` the
-  spool is a fresh temporary directory.
+  ``path`` option re-reads it. Restart durability needs ``path`` (the
+  restarted query resumes from its checkpoint's offset into the same
+  spool); without ``path`` the spool is a fresh temporary directory.
 * Reconnect-with-backoff mirrors D7 (fixed 5 s,
   src/databasehandling.py:287-307).
 
@@ -31,7 +32,12 @@ sans-IO and unit-tested; only ``_Receivers`` touches the network.
 
 from __future__ import annotations
 
+import fcntl
 import json
+import os
+import shutil
+import signal
+import tempfile
 import threading
 import time
 from dataclasses import dataclass, field
@@ -103,11 +109,42 @@ def _connect(caster: dict):
 
 class _Receivers:
     """The live source's feeder: one receiver thread per caster entry,
-    all appending to one inbox. Threads start on ``start()``, so an
-    unstarted feeder pickles with its reader."""
+    all appending to one inbox, plus the spool's process lifecycle
+    (its writer lock, SIGTERM, removing a temporary spool). Nothing
+    starts before ``open()``, so an unopened feeder pickles with its
+    reader."""
 
     def __init__(self, casters: list[dict]):
         self.casters = casters
+
+    def open(self, path: str | None) -> str:
+        """Take the spool at ``path`` (a fresh temporary directory when
+        None), start the receivers and return the spool directory."""
+        self._tmp = not path
+        self.path = path or tempfile.mkdtemp(prefix="ntrip-spool-")
+        os.makedirs(self.path, exist_ok=True)
+        # One writer per spool: a restarted query waits here for the
+        # previous query's process to flush and exit.
+        self._lock_file = open(os.path.join(self.path, ".lock"), "w")
+        fcntl.flock(self._lock_file, fcntl.LOCK_EX)
+        # Spark stops this process with SIGTERM and then closes its
+        # socket; the runner's read then fails and its ``finally:
+        # reader.stop()`` calls close(). Ignoring the signal means the
+        # process never exits halfway through writing a segment.
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)
+        self.start()
+        return self.path
+
+    def close(self, append) -> None:
+        """Stop the receivers and ``append`` what they still hold as
+        the last segment; a temporary spool is removed instead, as
+        nothing can resume from it."""
+        rows = self.stop()
+        if self._tmp:
+            shutil.rmtree(self.path, ignore_errors=True)
+        else:
+            append(rows)
+        self._lock_file.close()
 
     def start(self) -> None:
         self._inbox: list[tuple[str, int, bytes]] = []
@@ -133,9 +170,9 @@ class _Receivers:
 
     def _receive(self, caster: dict) -> None:
         """Thread body: hold one connection to the mountpoint and queue
-        its frames until ``stop()``. A refused connect, an EOF or a
-        non-200 answer closes the connection and retries after
-        ``RECONNECT_DELAY_S``."""
+        its frames until ``stop()``. A refused connect, an EOF, a
+        non-200 answer or a malformed chunked body closes the
+        connection and retries after ``RECONNECT_DELAY_S``."""
         mp = caster["mountpoint"]
         sock = state = None
         try:
@@ -155,10 +192,11 @@ class _Receivers:
                     frames = state.feed(data)
                 # TimeoutError ⊂ OSError: the timeout arm must come FIRST
                 # or every idle poll drops the connection; everything else
-                # (graceful EOF, reset, non-200) reconnects (D7).
+                # (graceful EOF, reset, non-200, a bad chunk framing
+                # from ChunkedDecoder) reconnects (D7).
                 except TimeoutError:  # poll the stop flag
                     continue
-                except OSError:
+                except (OSError, ValueError):
                     sock.close()
                     sock = None
                     self._stopping.wait(RECONNECT_DELAY_S)

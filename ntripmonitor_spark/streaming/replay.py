@@ -82,14 +82,6 @@ def _segment_table(path: str):
     return pq.read_table(path, columns=_COLUMNS).combine_chunks()
 
 
-def _exit_once(signum, frame):
-    import signal
-    import sys
-
-    signal.signal(signal.SIGTERM, signal.SIG_IGN)  # a repeat would cut stop() short
-    sys.exit()
-
-
 class _ReplayReader(DataSourceStreamReader):
     """Partition-based stream reader: offsets are archive row
     positions; the DATA is read executor-side (the driver handles only
@@ -98,12 +90,11 @@ class _ReplayReader(DataSourceStreamReader):
 
     ``feeder`` (the live source's caster receivers) turns the archive
     into a spool: every ``latestOffset()`` appends what the feeder
-    received as one new segment, and ``stop()`` flushes the rest."""
+    received as one new segment and offers the whole spool, and
+    ``stop()`` appends the rest."""
 
     def __init__(self, options, feeder=None):
         self.path = options.get("path")
-        if not self.path and feeder is None:
-            raise ValueError("ntrip_replay requires option 'path'")
         self.feeder = feeder
         self.batch_rows = int(options.get("batchrows", "1000"))
         # Restart safety: latestOffset() has no access to the engine's
@@ -118,36 +109,19 @@ class _ReplayReader(DataSourceStreamReader):
         self._cur: int | None = None  # replay cursor (row position)
 
     def _open(self) -> None:
-        """List the archive's segments once (row counts from parquet
-        footers) and start the feeder; later segments are only ever
+        """Open the feeder, then list the archive's segments once (row
+        counts from parquet footers); later segments are only ever
         appended by this reader."""
         if self._files is not None:
             return
         import pyarrow.dataset as ds
 
         if self.feeder is not None:
-            import fcntl
-            import signal
-            import tempfile
-
-            self._tmp = not self.path
-            self.path = self.path or tempfile.mkdtemp(prefix="ntrip-spool-")
-            os.makedirs(self.path, exist_ok=True)
-            # One writer per spool: a restarted query waits here for
-            # the previous query's process to flush and exit.
-            self._lock = open(os.path.join(self.path, ".lock"), "w")
-            fcntl.flock(self._lock, fcntl.LOCK_EX)
-            # Spark ends this process with SIGTERM when the query stops;
-            # exiting through SystemExit runs the runner's
-            # ``finally: reader.stop()``, which spools the frames the
-            # receivers still hold.
-            signal.signal(signal.SIGTERM, _exit_once)
+            self.path = self.feeder.open(self.path)
         self._files = []
         for frag in ds.dataset(self.path, format="parquet").get_fragments():
             self._files.append(frag.path)
             self._starts.append(self._starts[-1] + frag.count_rows())
-        if self.feeder is not None:
-            self.feeder.start()
 
     def _append(self, rows: list[tuple[str, int, bytes]]) -> None:
         """Write ``rows`` as the next immutable segment: a temporary
@@ -191,13 +165,17 @@ class _ReplayReader(DataSourceStreamReader):
         return {"row": 0}
 
     def latestOffset(self) -> dict:
+        self._open()
+        if self.feeder is not None:
+            # A live batch takes the whole spool, so ingest keeps up
+            # with any feed; the spool only grows, so its end is never
+            # behind a restarted query's recovered offset.
+            self._append(self.feeder.drain())
+            return {"row": self._starts[-1]}
         # Rate-limited replay: advance at most batch_rows per trigger,
         # starting from the recovered WAL position on restart. The
         # engine replays any uncommitted tail from its own offset log;
         # this cursor only governs NEW batches.
-        self._open()
-        if self.feeder is not None:
-            self._append(self.feeder.drain())
         if self._cur is None:
             self._cur = self._recovered_cursor()
         self._cur = min(self._cur + self.batch_rows, self._starts[-1])
@@ -229,16 +207,8 @@ class _ReplayReader(DataSourceStreamReader):
             self._cur = end["row"]
 
     def stop(self) -> None:
-        if self.feeder is None or self._files is None:
-            return
-        rows = self.feeder.stop()
-        if self._tmp:  # nothing can resume from a temporary spool
-            import shutil
-
-            shutil.rmtree(self.path, ignore_errors=True)
-        else:
-            self._append(rows)
-        self._lock.close()
+        if self.feeder is not None and self._files is not None:
+            self.feeder.close(self._append)
 
 
 class NtripReplayDataSource(DataSource):
@@ -252,6 +222,8 @@ class NtripReplayDataSource(DataSource):
         return ARCHIVE_SCHEMA
 
     def streamReader(self, schema):
+        if not self.options.get("path"):
+            raise ValueError("ntrip_replay requires option 'path'")
         return _ReplayReader(self.options)
 
 

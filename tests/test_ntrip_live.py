@@ -71,11 +71,12 @@ def test_stream_state_rejects_non_200():
     assert raised
 
 
-class _FakeFeeder:
-    """Stands in for the caster receivers: each drain() hands over the
+class _ScriptedReceivers(_Receivers):
+    """Caster receivers without sockets: each drain() hands over the
     next scripted list of received rows; stop() hands over a tail."""
 
     def __init__(self, drains, tail):
+        super().__init__([])
         self.drains, self.tail = list(drains), tail
 
     def start(self):
@@ -96,9 +97,10 @@ def _read_rows(reader, start, end):
 
 def test_reader_offsets_and_partitions(tmp_path, monkeypatch):
     """Live offsets are spool row positions: every latestOffset()
-    spools what the receivers hold as one segment, partitions slice
-    row ranges across segments, stop() spools the tail, and a
-    restarted reader lists the same rows in the same order."""
+    spools what the receivers hold as one segment and offers the whole
+    spool, partitions slice row ranges across segments, stop() spools
+    the tail, a restarted reader lists the same rows in the same order,
+    and a spool without ``path`` is removed at stop()."""
     import signal
 
     monkeypatch.setattr(signal, "signal", lambda *a: None)  # keep pytest's SIGTERM
@@ -113,7 +115,7 @@ def test_reader_offsets_and_partitions(tmp_path, monkeypatch):
     assert [c["mountpoint"] for c in r.feeder.casters] == ["MP1", "MP2"]
     segments = [[("MP1", 10 * i, b"a%d" % i), ("MP2", 10 * i + 1, b"b%d" % i)]
                 for i in range(6)]
-    r.feeder = _FakeFeeder(segments, tail=[("MP2", 99, b"tail")])  # no sockets
+    r.feeder = _ScriptedReceivers(segments, tail=[("MP2", 99, b"tail")])
     assert r.initialOffset() == {"row": 0}
     o1, o2 = r.latestOffset(), r.latestOffset()
     assert (o1, o2) == ({"row": 2}, {"row": 4})
@@ -130,11 +132,24 @@ def test_reader_offsets_and_partitions(tmp_path, monkeypatch):
     assert everything == [row for seg in segments for row in seg]
     # the worker cache holds a bounded number of segment tables
     assert replay._segment_table.cache_info().currsize <= 4
+    # no per-batch row cap: a burst is one batch however large
+    burst = [("MP1", 1000 + k, b"c%d" % k) for k in range(1500)]
+    r.feeder.drains = [burst]
+    assert r.latestOffset() == {"row": 1512}
+    everything += burst
 
     r.stop()
     restarted = replay._ReplayReader({"path": spool, "batchrows": "5"})
     assert restarted.latestOffset() == {"row": 5}
-    assert _read_rows(restarted, {"row": 0}, {"row": 13}) == everything + [("MP2", 99, b"tail")]
+    assert (_read_rows(restarted, {"row": 0}, {"row": 1513})
+            == everything + [("MP2", 99, b"tail")])
+
+    t = NtripLiveDataSource({"casters": json.dumps(casters)}).streamReader(ARCHIVE_SCHEMA)
+    t.feeder = _ScriptedReceivers([[("MP1", 1, b"x")]], tail=[("MP1", 2, b"y")])
+    assert t.latestOffset() == {"row": 1}
+    assert sorted(os.listdir(t.path)) == [".lock", "part-00000000000000000000.parquet"]
+    t.stop()
+    assert not os.path.exists(t.path)
 
 
 def test_read_socket_window_loopback():
@@ -166,6 +181,50 @@ def test_read_socket_window_loopback():
     srv.close()
     assert [r[2] for r in rows] == [f1, f2]
     assert all(r[0] == "LOOP" for r in rows)
+
+
+def test_receiver_reconnects_after_bad_chunk(monkeypatch):
+    """A chunked body with a malformed chunk-length line (the decoder's
+    ValueError) drops that connection and the receiver reconnects (D7)
+    instead of its thread ending with the mountpoint left silent."""
+    from ntripmonitor_spark.sources import ntrip_live
+
+    monkeypatch.setattr(ntrip_live, "RECONNECT_DELAY_S", 0.05)
+    f1, f2 = _frames()
+    head = b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
+    srv = socket.create_server(("127.0.0.1", 0))
+    port = srv.getsockname()[1]
+    first_closed_by_client = []
+
+    def serve():
+        conn, _ = srv.accept()
+        conn.recv(4096)
+        conn.sendall(head + b"zz\r\n")  # not a hex chunk length
+        conn.settimeout(10)
+        first_closed_by_client.append(conn.recv(4096) == b"")
+        conn.close()
+        conn2, _ = srv.accept()
+        conn2.recv(4096)
+        body = f1 + f2
+        conn2.sendall(head + b"%x\r\n" % len(body) + body + b"\r\n")
+        conn2.settimeout(10)
+        conn2.recv(4096)  # hold the connection until the receiver stops
+        conn2.close()
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    receivers = _Receivers([{"url": f"http://127.0.0.1:{port}", "mountpoint": "BAD"}])
+    receivers.start()
+    rows = []
+    deadline = time.monotonic() + 10
+    while len(rows) < 2 and time.monotonic() < deadline:
+        rows += receivers.drain()
+        time.sleep(0.05)
+    rows += receivers.stop()
+    t.join(timeout=2)
+    srv.close()
+    assert first_closed_by_client == [True]
+    assert [r[2] for r in rows] == [f1, f2]
 
 
 def test_live_source_through_readstream(spark, tmp_path):
@@ -412,7 +471,7 @@ def _wait(cond, what: str, timeout: float = 60.0):
 
 def test_live_restart_exactly_once(spark, tmp_path):
     """Stop the live query mid-stream and restart it on the same spool
-    ``path`` and checkpoint, twice: every served frame reaches the
+    ``path`` and checkpoint location, twice: every served frame reaches the
     idempotent sink exactly once, each run holds one connection per
     mountpoint, stopping closes every connection and spools what the
     receivers hold, and the spool replays as the bronze archive of
@@ -433,7 +492,6 @@ def test_live_restart_exactly_once(spark, tmp_path):
             spark.readStream.format("ntrip_live")
             .option("casters", json.dumps(caster.casters()))
             .option("path", spool)
-            .option("checkpoint", ckpt)
             .load()
             .writeStream.option("checkpointLocation", ckpt)
             .foreachBatch(idempotent_parquet_sink(sink))
