@@ -1,5 +1,5 @@
 """Sinks (SURVEY.md §2.4): JDBC append / upsert / point-update plus
-constellation routing, engineered for idempotent ``foreachBatch``.
+constellation routing, for ``foreachBatch`` bodies.
 
 Postgres/TimescaleDB stays external (§7.0); the engine produces
 byte-compatible rows. Plain appends use Spark's JDBC writer (typed
@@ -13,8 +13,8 @@ procedures (`initdb/99-stored_procedures.sql:154-231`).
 FK linkage: the reference round-trips to the DB for
 ``rtcm_package_id`` (`src/databasehandling.py:143-145`); Spark-side we
 mint a deterministic ``package_uid`` (§7.3) so packages and
-observations link without a synchronous round-trip and replays are
-idempotent.
+observations link without a synchronous round-trip and a replayed
+batch mints the same ids.
 """
 
 from __future__ import annotations
@@ -52,15 +52,6 @@ def upsert_sql(table: str, cols: list[str], conflict_cols: list[str],
     return (
         f"INSERT INTO {table} ({', '.join(cols)}) VALUES ({placeholders}) "
         f"ON CONFLICT ({', '.join(conflict_cols)}) DO UPDATE SET {sets}"
-    )
-
-
-def coordinates_upsert_sql() -> str:
-    """K3: last-writer-wins per station (initdb/99:208-231)."""
-    return upsert_sql(
-        "coordinates",
-        ["mountpoint", "ecef_x_m", "ecef_y_m", "ecef_z_m", "ant_height_m", "updated_at"],
-        ["mountpoint"],
     )
 
 
@@ -118,8 +109,9 @@ def jdbc_sink(url: str, packages_table: str = "rtcm_packages",
     observations inside, appending each. ``store_observations=False``
     is the K7 envelope-only gate (reference
     ``DB_STORE_OBSERVATIONS=false``, src/ingestion.py:944).
-    Idempotency: callers pair this with batch-id bookkeeping (see
-    streaming.pipeline.idempotent_parquet_sink for the parquet analog).
+    At-least-once: a replayed batch id appends its rows again. The
+    exactly-once forms keep batch-id bookkeeping — ``sinks_sql``'s
+    ledger, ``streaming.pipeline.write_batch`` for parquet.
     """
     from ntripmonitor_spark.operators import rtcm
 

@@ -124,7 +124,7 @@ def scan_frames_batch(blobs: list[bytes]) -> tuple[list[bytes], list[int]]:
     return frames, out_idx
 
 
-def split_frames(blobs: DataFrame, drop_partial: bool = True) -> DataFrame:
+def split_frames(blobs: DataFrame) -> DataFrame:
     """(mountpoint, receive_time, blob) → (mountpoint, receive_time,
     frame) with one row per CRC-valid frame, order-preserving within a
     blob. Partial tails are dropped (batch semantics)."""

@@ -72,10 +72,10 @@ class MountpointStreamState:
         """Raw socket bytes in → complete CRC-valid frames out."""
         if not self.head_parsed:
             self._raw.extend(data)
-            try:
-                head, rest = parse_response_head(bytes(self._raw))
-            except ValueError:
+            if b"\r\n\r\n" not in self._raw:
                 return []  # header still incomplete
+            # a malformed complete header raises ValueError: reconnect
+            head, rest = parse_response_head(bytes(self._raw))
             if head.status != 200:
                 raise ConnectionError(f"{self.mountpoint}: caster answered {head.status}")
             self.head_parsed = True
@@ -171,8 +171,8 @@ class _Receivers:
     def _receive(self, caster: dict) -> None:
         """Thread body: hold one connection to the mountpoint and queue
         its frames until ``stop()``. A refused connect, an EOF, a
-        non-200 answer or a malformed chunked body closes the
-        connection and retries after ``RECONNECT_DELAY_S``."""
+        non-200 answer, a malformed status line or a malformed chunked body
+        closes the connection and retries after ``RECONNECT_DELAY_S``."""
         mp = caster["mountpoint"]
         sock = state = None
         try:
@@ -192,8 +192,8 @@ class _Receivers:
                     frames = state.feed(data)
                 # TimeoutError ⊂ OSError: the timeout arm must come FIRST
                 # or every idle poll drops the connection; everything else
-                # (graceful EOF, reset, non-200, a bad chunk framing
-                # from ChunkedDecoder) reconnects (D7).
+                # (graceful EOF, reset, non-200, a bad status line, a bad
+                # chunk framing from ChunkedDecoder) reconnects (D7).
                 except TimeoutError:  # poll the stop flag
                     continue
                 except (OSError, ValueError):

@@ -1,7 +1,7 @@
 """Streaming ANN index maintenance — the arrival path of the IVF
 serving stack (ss06/ss11): new embedding batches are assigned to their
 nearest coarse-quantizer cell against a FROZEN centroid set and
-appended under ``cell=<c>/batch_id=<n>`` partitions, so the serving
+appended under ``batch_id=<n>/cell=<c>`` partitions, so the serving
 scan stays partition-pruned to the probed cells while the index grows.
 
 Mergeable-state discipline (the sk01/cm01/drift.py family): appends
@@ -15,24 +15,20 @@ the standard "freeze, serve, monitor, retrain" index lifecycle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ntripmonitor_spark.operators.simsearch import cell_assignments
+from ntripmonitor_spark.streaming.pipeline import write_batch
 
 
 def cell_assign_sink(base_path: str, seeds: list[tuple[int, list[float]]]):
     """foreachBatch body: assign the micro-batch against the frozen
-    quantizer and overwrite this batch's partition, sub-partitioned by
-    cell (idempotent on replay; serving reads prune to cell=K dirs)."""
+    quantizer and land it with `write_batch`, sub-partitioned by cell
+    (serving reads prune to cell=K dirs)."""
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        assigned = cell_assignments(batch, seeds)
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(base_path, f"batch_id={batch_id}")
-        )
+        write_batch(cell_assignments(batch, seeds), base_path, batch_id, "cell")
 
     return write
 

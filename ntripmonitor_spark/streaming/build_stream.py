@@ -10,8 +10,9 @@ micro-batch, landing trainer-ready split/shard parquet incrementally.
         idempotent batch_id-partitioned append
 
 Exactly-once discipline: every output file lives under
-(split, shard, batch_id=N); a checkpoint replay overwrites its own
-batch_id partition and cannot double-write. Trainer-side reads
+batch_id=N/split=S/shard=K, landed by ``streaming.pipeline.write_batch``;
+a checkpoint replay overwrites its own batch_id partition and cannot
+double-write. Trainer-side reads
 aggregate across batch_id (a directory-listing-free manifest can be
 maintained by compaction, as in streaming/rollup.py).
 
@@ -22,14 +23,12 @@ same (split, shard) no matter which micro-batch carried it.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ntripmonitor_spark.export import stage_training_shards
 from ntripmonitor_spark.sources.corpus import DOCUMENT_SCHEMA
-from ntripmonitor_spark.streaming.pipeline import stream_curation_gate
+from ntripmonitor_spark.streaming.pipeline import stream_curation_gate, write_batch
 
 
 def corpus_file_stream(spark: SparkSession, jsonl_dir: str,
@@ -49,23 +48,18 @@ def corpus_file_stream(spark: SparkSession, jsonl_dir: str,
 
 def shard_append_sink(out_path: str, quarantine_path: str, n_shards: int = 16):
     """foreachBatch body: quarantine corrupt lines, stage deterministic
-    (split, shard) placement, append under batch_id=N (idempotent)."""
+    (split, shard) placement, land both with `write_batch`."""
 
     def write(batch: DataFrame, batch_id: int) -> None:
         bad = batch.filter(F.col("_corrupt_record").isNotNull())
-        bad.select(F.col("_corrupt_record").alias("raw_line")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(quarantine_path, f"batch_id={batch_id}"))
+        write_batch(bad.select(F.col("_corrupt_record").alias("raw_line")),
+                    quarantine_path, batch_id)
         good = batch.filter(F.col("_corrupt_record").isNull()).drop(
             "_corrupt_record", "ingest_time", "quality_score"
         )
         staged = stage_training_shards(good, n_shards=n_shards)
-        (
-            staged.repartition("split", "shard")
-            .write.mode("overwrite")
-            .partitionBy("split", "shard")
-            .parquet(os.path.join(out_path, f"batch_id={batch_id}"))
-        )
+        write_batch(staged.repartition("split", "shard"), out_path, batch_id,
+                    "split", "shard")
 
     return write
 

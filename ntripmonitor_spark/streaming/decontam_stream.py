@@ -6,9 +6,9 @@ table is FIXED state computed from a static eval DataFrame — it is
 eval-suite-sized, so its signatures and bands broadcast into every
 micro-batch. Per batch: sign the batch (one scan), band it, join the
 broadcast benchmark bands, score candidates by signature slot
-agreement, and land per-doc contamination rows under an idempotent
-batch_id partition (the dedup_stream sink discipline: a replayed
-batch overwrites its own partition, so restart cannot double-write).
+agreement, and land per-doc contamination rows with
+``streaming.pipeline.write_batch`` (a replayed batch overwrites its own
+``batch_id=N`` partition, so restart cannot double-write).
 
 Equivalence with the batch operator is pinned in
 tests/test_round9_ops.py over a multi-trigger replay — the streaming
@@ -31,6 +31,29 @@ from ntripmonitor_spark.operators.dedup import (
     bench_match_scores,
     minhash_signatures,
 )
+from ntripmonitor_spark.streaming.pipeline import write_batch
+
+
+def fuzzy_decontam_sink(bench_docs: DataFrame, scores_path: str,
+                        n: int = 3, min_matches: int = 5):
+    """foreachBatch body: score the batch against ``bench_docs`` (the
+    static eval set, doc_id + text) and land its per-doc rows."""
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        # Benchmark signatures: tiny (eval-suite-sized) and
+        # deterministic — recomputed per batch for simplicity; a
+        # long-lived deployment would pin them as a silver table.
+        bsig = minhash_signatures(bench_docs, n)
+        csig = minhash_signatures(batch, n)
+        scores = bench_match_scores(csig, bsig).select(
+            F.col("corpus_id").alias("doc_id"),
+            "n_pairs",
+            F.col("max_m").alias("max_slot_matches"),
+            (F.col("max_m") >= min_matches).alias("flagged"),
+        )
+        write_batch(scores, scores_path, batch_id)
+
+    return write
 
 
 def start_fuzzy_decontam_stream(doc_stream: DataFrame, bench_docs: DataFrame,
@@ -40,32 +63,9 @@ def start_fuzzy_decontam_stream(doc_stream: DataFrame, bench_docs: DataFrame,
     started streaming query. Per-doc contamination rows land at
     ``scores_path`` (batch_id partitions). ``bench_docs`` is the
     static eval set (doc_id + text)."""
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        # Benchmark signatures: tiny (eval-suite-sized) and
-        # deterministic — recomputed per batch for simplicity; a
-        # long-lived deployment would pin them as a silver table.
-        bsig = minhash_signatures(bench_docs, n)
-        csig = minhash_signatures(batch_df, n)
-        scores = bench_match_scores(csig, bsig).select(
-            F.col("corpus_id").alias("doc_id"),
-            "n_pairs",
-            F.col("max_m").alias("max_slot_matches"),
-            (F.col("max_m") >= min_matches).alias("flagged"),
-        )
-        (
-            scores.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            # per-write option, NOT spark.conf.set on the shared session:
-            # a session-level partitionOverwriteMode=dynamic would leak
-            # past the stream and silently change overwrite semantics for
-            # unrelated writes (ADVICE r9)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(scores_path)
-        )
-
     return (
-        doc_stream.writeStream.foreachBatch(batch_fn)
+        doc_stream.writeStream
+        .foreachBatch(fuzzy_decontam_sink(bench_docs, scores_path, n, min_matches))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

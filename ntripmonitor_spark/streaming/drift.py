@@ -1,8 +1,9 @@
 """Streaming distribution-drift monitoring — the ks01 monitor kept
 incrementally the way `streaming/sketches.py` keeps Count-Min counters:
 each micro-batch reduces to its per-(group, value) count PARTIALS and
-writes them under an idempotent ``batch_id=N`` partition; readers merge
-with a per-(group, value) SUM and run the bounded-grid KS plan
+lands them with ``streaming.pipeline.write_batch`` (an idempotent
+``batch_id=N`` partition); readers merge with a per-(group, value)
+SUM and run the bounded-grid KS plan
 (`operators.stats.ks_from_counts`), which equals the batch `ks_drift`
 of the full stream exactly — counts are trivially mergeable state.
 
@@ -15,28 +16,21 @@ counts however much history has accumulated.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ntripmonitor_spark.operators.stats import ks_from_counts
+from ntripmonitor_spark.streaming.pipeline import write_batch
 
 
 def drift_sink(base_path: str, value_col: str = "n_chars",
                group_col: str = "source"):
     """foreachBatch body: reduce the micro-batch to its (group, value)
-    count partials and overwrite this batch's partition (idempotent on
-    replay — the `idempotent_parquet_sink` discipline)."""
+    count partials and land them with `write_batch`."""
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        partials = (
-            batch.groupBy(group_col, value_col)
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        partials.write.mode("overwrite").parquet(
-            os.path.join(base_path, f"batch_id={batch_id}")
-        )
+        partials = batch.groupBy(group_col, value_col).agg(F.count(F.lit(1)).alias("c"))
+        write_batch(partials, base_path, batch_id)
 
     return write
 

@@ -114,15 +114,26 @@ def stream_curation_gate(docs: DataFrame, quality_min: float = 0.5,
     return d
 
 
+def write_batch(df: DataFrame, base_path: str, batch_id: int,
+                *partition_by: str) -> None:
+    """Land one micro-batch under ``<base_path>/batch_id=<N>`` with
+    overwrite (optionally sub-partitioned by ``partition_by``), so a
+    replayed batch id (restart-from-checkpoint) rewrites its own output
+    instead of adding to it — the exactly-once-discipline upgrade over
+    the reference's at-least-once inserts (SURVEY.md §2.6). Every
+    foreachBatch sink writes through here; readers see ``batch_id`` as
+    a partition column."""
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(os.path.join(base_path, f"batch_id={batch_id}"))
+
+
 def idempotent_parquet_sink(base_path: str):
-    """foreachBatch writer: each micro-batch lands in its own
-    ``batch_id=N`` partition with overwrite, so replayed batch ids
-    (restart-from-checkpoint) cannot double-write — the
-    exactly-once-discipline upgrade over the reference's
-    at-least-once inserts (SURVEY.md §2.6)."""
+    """foreachBatch body: the micro-batch as it is, via ``write_batch``."""
 
     def write(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(base_path, f"batch_id={batch_id}"))
+        write_batch(df, base_path, batch_id)
 
     return write
 
@@ -131,10 +142,9 @@ def decoded_parquet_sink(out_path: str, obs_path: str):
     """foreachBatch body over a DECODED stream: the envelope and the
     routed observations (the K7 gate's on state; envelope-only runs
     keep the projection in the streaming plan, see
-    ``start_archive_stream``). Same batch_id=N overwrite discipline as
-    ``idempotent_parquet_sink`` — replayed batch ids cannot
-    double-write. One decode feeds both projections (the batch is
-    persisted across the two writes).
+    ``start_archive_stream``), each landed by ``write_batch``. One
+    decode feeds both projections (the batch is persisted across the
+    two writes).
 
     The body rebuilds the projections on every batch, before any job
     runs. As SQL text that costs 11 (``packages``) + 31
@@ -146,12 +156,8 @@ def decoded_parquet_sink(out_path: str, obs_path: str):
     def write(decoded: DataFrame, batch_id: int) -> None:
         decoded.persist()
         try:
-            rtcm_ops.packages(decoded).write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch_id={batch_id}")
-            )
-            rtcm_ops.observations(decoded).write.mode("overwrite").parquet(
-                os.path.join(obs_path, f"batch_id={batch_id}")
-            )
+            write_batch(rtcm_ops.packages(decoded), out_path, batch_id)
+            write_batch(rtcm_ops.observations(decoded), obs_path, batch_id)
         finally:
             decoded.unpersist()
 

@@ -1,9 +1,9 @@
 """Streaming table profiling — dq01's continuous twin: each
 micro-batch reduces to a bounded PARTIAL profile row set (per column:
 row/null counts, numeric min/max, and the column's KMV hash sketch for
-distinct counting), written under an idempotent ``batch_id=N``
-partition; merge-on-read reconstructs the exact whole-stream counts
-and ranges, plus a KMV distinct estimate whose state merged across
+distinct counting), landed by ``streaming.pipeline.write_batch``
+under an idempotent ``batch_id=N`` partition; merge-on-read
+reconstructs the exact whole-stream counts and ranges, plus a KMV distinct estimate whose state merged across
 batches is IDENTICAL to the batch-computed sketch (k smallest of a
 union is associative — the property that makes the sketch streamable).
 
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ntripmonitor_spark.operators.sampling import KNUTH
+from ntripmonitor_spark.streaming.pipeline import write_batch
 
 KMV_K = 64
 
@@ -75,17 +76,13 @@ def profile_partial(batch: DataFrame, num_cols: list[str]) -> tuple[DataFrame, D
 
 
 def profile_sink(base_path: str, num_cols: list[str]):
-    """foreachBatch body: write both partial relations under this
-    batch's idempotent partition."""
+    """foreachBatch body: land both partial relations with
+    `write_batch`, under ``stats/`` and ``kmv/``."""
 
     def write(batch: DataFrame, batch_id: int) -> None:
         stats, kmv = profile_partial(batch, num_cols)
-        stats.write.mode("overwrite").parquet(
-            os.path.join(base_path, "stats", f"batch_id={batch_id}")
-        )
-        kmv.write.mode("overwrite").parquet(
-            os.path.join(base_path, "kmv", f"batch_id={batch_id}")
-        )
+        write_batch(stats, os.path.join(base_path, "stats"), batch_id)
+        write_batch(kmv, os.path.join(base_path, "kmv"), batch_id)
 
     return write
 

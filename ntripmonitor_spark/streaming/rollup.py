@@ -4,9 +4,9 @@ hypertable rollups; initdb/01-rtcm_packages.sql + Grafana $__interval
 buckets).
 
 Pattern: each micro-batch reduces to PARTIAL aggregates per (bucket,
-mountpoint) and appends them under its own ``batch_id=N`` partition
-(idempotent overwrite on replay — same discipline as
-``idempotent_parquet_sink``). Readers merge partials with a second
+mountpoint) and lands them with ``streaming.pipeline.write_batch``
+under its own ``batch_id=N`` partition (idempotent overwrite on
+replay). Readers merge partials with a second
 aggregation — count/sum are mergeable, so merge-on-read equals the
 batch aggregate exactly. State never lives in the stream (no
 watermark bound on rollup age), appends are blind (no read-modify-
@@ -16,10 +16,10 @@ batch partitions into one.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ntripmonitor_spark.streaming.pipeline import write_batch
 
 
 def rollup_partials(packages: DataFrame, window: str = "1 hour") -> DataFrame:
@@ -41,10 +41,7 @@ def rollup_sink(base_path: str, window: str = "1 hour"):
     from ntripmonitor_spark.operators import rtcm
 
     def write(decoded: DataFrame, batch_id: int) -> None:
-        partials = rollup_partials(rtcm.packages(decoded), window)
-        partials.write.mode("overwrite").parquet(
-            os.path.join(base_path, f"batch_id={batch_id}")
-        )
+        write_batch(rollup_partials(rtcm.packages(decoded), window), base_path, batch_id)
 
     return write
 

@@ -1,7 +1,8 @@
 """Streaming sketch maintenance — Count-Min counters kept incrementally
 the same way `streaming/rollup.py` keeps continuous aggregates: each
-micro-batch writes its own PARTIAL counter table under an idempotent
-``batch_id=N`` partition, and readers merge with a per-(d, bkt) SUM
+micro-batch lands its own PARTIAL counter table with
+``streaming.pipeline.write_batch`` (an idempotent ``batch_id=N``
+partition), and readers merge with a per-(d, bkt) SUM
 (`operators.sketch.countmin_merge`), which equals the batch sketch
 exactly — the mergeability the deterministic hash family buys.
 
@@ -14,8 +15,6 @@ blind, and compaction is an optional rewrite.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -26,19 +25,17 @@ from ntripmonitor_spark.operators.sketch import (
     countmin_counters,
     countmin_merge,
 )
+from ntripmonitor_spark.streaming.pipeline import write_batch
 
 
 def countmin_sink(base_path: str, member_col: str = "user_id",
                   depth: int = CMS_DEPTH, width: int = CMS_WIDTH):
     """foreachBatch body: reduce the micro-batch to its ≤ depth×width
-    partial counters and overwrite this batch's partition (idempotent
-    on replay — the `idempotent_parquet_sink` discipline)."""
+    partial counters and land them with `write_batch`."""
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        partials = countmin_counters(batch, member_col, depth=depth, width=width)
-        partials.write.mode("overwrite").parquet(
-            os.path.join(base_path, f"batch_id={batch_id}")
-        )
+        write_batch(countmin_counters(batch, member_col, depth=depth, width=width),
+                    base_path, batch_id)
 
     return write
 

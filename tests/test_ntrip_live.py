@@ -185,46 +185,53 @@ def test_read_socket_window_loopback():
 
 def test_receiver_reconnects_after_bad_chunk(monkeypatch):
     """A chunked body with a malformed chunk-length line (the decoder's
-    ValueError) drops that connection and the receiver reconnects (D7)
-    instead of its thread ending with the mountpoint left silent."""
+    ValueError), or a complete header with a malformed status line
+    (``parse_response_head``'s), drops that connection and the receiver
+    reconnects (D7) instead of its thread ending, or holding the
+    connection, with the mountpoint left silent."""
     from ntripmonitor_spark.sources import ntrip_live
 
     monkeypatch.setattr(ntrip_live, "RECONNECT_DELAY_S", 0.05)
     f1, f2 = _frames()
     head = b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
-    srv = socket.create_server(("127.0.0.1", 0))
-    port = srv.getsockname()[1]
-    first_closed_by_client = []
+    bad_answers = {
+        "bad chunk": head + b"zz\r\n",  # not a hex chunk length
+        "bad status line": b"HTTP/1.1 OK\r\n\r\n" + f1,
+    }
+    for what, bad_answer in bad_answers.items():
+        srv = socket.create_server(("127.0.0.1", 0))
+        port = srv.getsockname()[1]
+        first_closed_by_client = []
 
-    def serve():
-        conn, _ = srv.accept()
-        conn.recv(4096)
-        conn.sendall(head + b"zz\r\n")  # not a hex chunk length
-        conn.settimeout(10)
-        first_closed_by_client.append(conn.recv(4096) == b"")
-        conn.close()
-        conn2, _ = srv.accept()
-        conn2.recv(4096)
-        body = f1 + f2
-        conn2.sendall(head + b"%x\r\n" % len(body) + body + b"\r\n")
-        conn2.settimeout(10)
-        conn2.recv(4096)  # hold the connection until the receiver stops
-        conn2.close()
+        def serve():
+            conn, _ = srv.accept()
+            conn.recv(4096)
+            conn.sendall(bad_answer)
+            conn.settimeout(10)
+            first_closed_by_client.append(conn.recv(4096) == b"")
+            conn.close()
+            conn2, _ = srv.accept()
+            conn2.recv(4096)
+            body = f1 + f2
+            conn2.sendall(head + b"%x\r\n" % len(body) + body + b"\r\n")
+            conn2.settimeout(10)
+            conn2.recv(4096)  # hold the connection until the receiver stops
+            conn2.close()
 
-    t = threading.Thread(target=serve, daemon=True)
-    t.start()
-    receivers = _Receivers([{"url": f"http://127.0.0.1:{port}", "mountpoint": "BAD"}])
-    receivers.start()
-    rows = []
-    deadline = time.monotonic() + 10
-    while len(rows) < 2 and time.monotonic() < deadline:
-        rows += receivers.drain()
-        time.sleep(0.05)
-    rows += receivers.stop()
-    t.join(timeout=2)
-    srv.close()
-    assert first_closed_by_client == [True]
-    assert [r[2] for r in rows] == [f1, f2]
+        t = threading.Thread(target=serve, daemon=True)
+        t.start()
+        receivers = _Receivers([{"url": f"http://127.0.0.1:{port}", "mountpoint": "BAD"}])
+        receivers.start()
+        rows = []
+        deadline = time.monotonic() + 10
+        while len(rows) < 2 and time.monotonic() < deadline:
+            rows += receivers.drain()
+            time.sleep(0.05)
+        rows += receivers.stop()
+        t.join(timeout=2)
+        srv.close()
+        assert first_closed_by_client == [True], what
+        assert [r[2] for r in rows] == [f1, f2], what
 
 
 def test_live_source_through_readstream(spark, tmp_path):

@@ -315,9 +315,7 @@ def test_streaming_kmv_matches_batch(spark, sf_dir, tmp_path):
     state = str(tmp_path / "kmv_state")
 
     def write(batch_df, batch_id):
-        sketch.kmv_partial(batch_df, k=16).write.mode("overwrite").parquet(
-            os.path.join(state, f"batch_id={batch_id}")
-        )
+        sp.write_batch(sketch.kmv_partial(batch_df, k=16), state, batch_id)
 
     q = (
         spark.readStream.schema(spark.read.parquet(src).schema)
@@ -855,16 +853,15 @@ def test_streaming_bucket_series_matches_batch(spark, sf_dir, tmp_path):
     state = str(tmp_path / "series_state")
 
     def write(batch_df, batch_id):
-        (
+        partials = (
             batch_df.select("event_type",
                             F.floor(epoch_us("ts") / F.lit(3_600_000_000))
                             .cast("long").alias("bkt"), "value")
             .groupBy("event_type", "bkt")
             .agg(F.sum(F.col("value").cast("decimal(38,6)")).alias("s"),
                  F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(state, f"batch_id={batch_id}"))
         )
+        sp.write_batch(partials, state, batch_id)
 
     q = (
         spark.readStream.schema(spark.read.parquet(src).schema)
